@@ -7,12 +7,23 @@ import graft.embedding.OfflineEmbedder
 import graft.ingest.IngestPipeline.DocInput
 
 /** CLI mirroring the reference's entry points (api/cli/{ingest,search,
-  * quality}.py) so a reference user can run the same workflows:
+  * quality}.py) so a reference user can run the same workflows, plus the
+  * index builds and serves over a tables dir (`runMain graft.Cli <verb>`;
+  * the usage line at the bottom of [[main]] gives every verb's arguments):
   *
-  *   runMain graft.Cli ingest <out_dir> <file...>
-  *   runMain graft.Cli search <tables_dir> "<query>" [topK] [view] [lang]
-  *   runMain graft.Cli quality <tables_dir> <golden.jsonl>
-  *   runMain graft.Cli metrics <tables_dir>
+  *   - tables: `ingest`, `reingest`, `compact`, `metrics`, `quality`
+  *   - exact retrieval: `search`, `rag`
+  *   - ANN: `index`/`ann-search` (IVF), `pq-index`/`pq-search`,
+  *     `sq-index`/`sq-search`, `hnsw-index`/`hnsw-search`,
+  *     `hnsw-index-routed`/`hnsw-search-routed`
+  *   - lexical and hybrid: `lex-index`/`lex-search`, `fusion-calibrate`,
+  *     `hybrid-search`
+  *   - catalog side tables: `index-sketches`, `classify-train`,
+  *     `classify-score`
+  *
+  * An optional positional argument given as `-` or `""` is absent, so a
+  * later one can be set while this one keeps its default
+  * (`hybrid-search <t> <q> 10 - en`).
   */
 object Cli {
 
@@ -41,9 +52,9 @@ object Cli {
         reingestCommand(spark, engine, tablesDir, files)
 
       case "search" :: tablesDir :: query :: rest =>
-        val topK = rest.headOption.map(_.toInt).getOrElse(10)
-        val view = rest.lift(1).filter(_ != "-")
-        val lang = rest.lift(2).filter(_ != "-")
+        val topK = intArg(rest, 0, 10)
+        val view = optArg(rest, 1)
+        val lang = optArg(rest, 2)
         val embeddings = spark.read.parquet(s"$tablesDir/embeddings")
           .as[graft.domain.Model.EmbeddingRow]
         val parents = spark.read.parquet(s"$tablesDir/parents")
@@ -62,8 +73,8 @@ object Cli {
       // the codegen'd expression, write partitioned by list_id (probes
       // become partition pruning on disk) + the quantizer sidecar.
       case "index" :: tablesDir :: rest =>
-        val k = rest.headOption.map(_.toInt).getOrElse(64)
-        val replicas = rest.lift(1).map(_.toInt).getOrElse(1)
+        val k = intArg(rest, 0, 64)
+        val replicas = intArg(rest, 1, 1)
         // doc_bucket is the SOURCE table's layout column; the index has its
         // own layout (list_id) and must not inherit it
         val e = spark.read.parquet(s"$tablesDir/embeddings").drop("doc_bucket")
@@ -86,13 +97,13 @@ object Cli {
       // ANN search against the persisted index: nprobe nearest lists →
       // partition-pruned scan → exact cosine re-rank.
       case "ann-search" :: tablesDir :: query :: rest =>
-        val topK = rest.headOption.map(_.toInt).getOrElse(10)
-        val nprobe = rest.lift(1).map(_.toInt).getOrElse(2)
+        val topK = intArg(rest, 0, 10)
+        val nprobe = intArg(rest, 1, 2)
         // optional metadata filter — the reference's primary query shape
         // (`--view code`: WHERE view = ? inside the index scan); the
         // predicate applies to the probed candidates BEFORE the re-rank
         // and the probe widens adaptively if it starves the candidates
-        val view = rest.lift(2).filter(_.nonEmpty)
+        val view = optArg(rest, 2)
         val q = graft.search.Ivf.load(s"$tablesDir/ivf_quantizer.txt")
         val index = spark.read.parquet(s"$tablesDir/embeddings_ivf")
         val qvec = new OfflineEmbedder(q.dim).embedQuery(query)
@@ -124,7 +135,7 @@ object Cli {
       // O(n·efC·log n) build cost is paid once at write time, like
       // IVF's list assignment).
       case "hnsw-index" :: tablesDir :: rest =>
-        val shards = rest.headOption.map(_.toInt).getOrElse(8)
+        val shards = intArg(rest, 0, 8)
         val e = spark.read.parquet(s"$tablesDir/embeddings")
         // docCol: the cascade key — without it the stored doc_id would be
         // the fragment id and replace-by-document maintenance (reingest,
@@ -142,8 +153,8 @@ object Cli {
       // whose per-query walk is flat in total shard count. Maintained
       // by reingest via the frozen router; served pruned to R cells.
       case "hnsw-index-routed" :: tablesDir :: rest =>
-        val cells = rest.headOption.map(_.toInt).getOrElse(8)
-        val replicas = rest.lift(1).map(_.toInt).getOrElse(3)
+        val cells = intArg(rest, 0, 8)
+        val replicas = intArg(rest, 1, 3)
         val e = spark.read.parquet(s"$tablesDir/embeddings")
           .drop("doc_bucket")
         val sample = e.orderBy(org.apache.spark.sql.functions.md5(
@@ -162,69 +173,25 @@ object Cli {
       // Routed graph walk: the query probes its R nearest cells only —
       // partition-pruned at the file source, replica-deduped merge.
       case "hnsw-search-routed" :: tablesDir :: query :: rest =>
-        val topK = rest.headOption.map(_.toInt).getOrElse(10)
-        val ef = rest.lift(1).map(_.toInt).getOrElse(64)
-        val r = rest.lift(2).map(_.toInt).getOrElse(6)
-        val view = rest.lift(3).filter(_.nonEmpty)
-        val idxPath = s"$tablesDir/embeddings_hnsw_routed"
-        val router = graft.search.Ivf.load(s"$idxPath.router.txt")
-        val index = spark.read.parquet(idxPath)
-        val dim = router.dim
-        val qvec = new OfflineEmbedder(dim).embedQuery(query)
-        val (searchable, pred) = view match {
-          case Some(v) =>
-            val meta = spark.read.parquet(s"$tablesDir/embeddings")
-              .select(col("fragment_id").as("__fid"),
-                col("view").as("__view"))
-            (index.join(meta, col("fragment_id") === col("__fid"),
-              "left"), Some(col("__view") === v))
-          case None => (index, None)
-        }
-        val hits = graft.search.Hnsw
-          .searchIndexRouted(searchable, Seq(("q", qvec)), topK, ef,
-            router, probeShards = r, predicate = pred)
-          .orderBy(col("rank"))
-          .select(col("fragment_id"), col("similarity")).collect()
-        hits.zipWithIndex.foreach { case (h, i) =>
-          println(f"#${i + 1}%-3d sim=${h.getDouble(1)}%.4f ${h.getString(0)}")
-        }
+        printDenseHits(graft.search.VectorSearch.dense(spark, tablesDir,
+          query, intArg(rest, 0, 10), ef = intArg(rest, 1, 64),
+          view = optArg(rest, 3), lang = None,
+          graft.search.VectorSearch.RoutedGraph(intArg(rest, 2, 6))))
 
       // Batch graph walk over the persisted adjacency table; ef = beam
       // width (ef >= shard size degenerates to the exact scan).
       case "hnsw-search" :: tablesDir :: query :: rest =>
-        val topK = rest.headOption.map(_.toInt).getOrElse(10)
-        val ef = rest.lift(1).map(_.toInt).getOrElse(64)
-        val view = rest.lift(2).filter(_.nonEmpty)
-        val index = spark.read.parquet(s"$tablesDir/embeddings_hnsw")
-        val dim = index.select(col("vector")).head()
-          .getAs[scala.collection.Seq[Float]](0).length
-        val qvec = new OfflineEmbedder(dim).embedQuery(query)
-        // filtered walk: the adjacency holds no metadata, so eligibility
-        // joins on from the source table — evaluated once per node, then
-        // the graph walk collects eligible nodes only
-        val (searchable, pred) = view match {
-          case Some(v) =>
-            val meta = spark.read.parquet(s"$tablesDir/embeddings")
-              .select(col("fragment_id").as("__fid"), col("view").as("__view"))
-            (index.join(meta, col("fragment_id") === col("__fid"), "left"),
-              Some(col("__view") === v))
-          case None => (index, None)
-        }
-        val hits = graft.search.Hnsw
-          .searchIndex(searchable, Seq(("q", qvec)), topK, ef,
-            predicate = pred)
-          .orderBy(col("rank"))
-          .select(col("fragment_id"), col("similarity")).collect()
-        hits.zipWithIndex.foreach { case (h, i) =>
-          println(f"#${i + 1}%-3d sim=${h.getDouble(1)}%.4f ${h.getString(0)}")
-        }
+        printDenseHits(graft.search.VectorSearch.dense(spark, tablesDir,
+          query, intArg(rest, 0, 10), ef = intArg(rest, 1, 64),
+          view = optArg(rest, 2), lang = None,
+          graft.search.VectorSearch.FlatGraph))
 
       // Extend the persisted IVF index with PQ codes (IVFPQ): train the
       // product codebook on the same deterministic sample, add the
       // codegen'd pq_code column, rewrite the index + codebook sidecar.
       case "pq-index" :: tablesDir :: rest =>
-        val m = rest.headOption.map(_.toInt).getOrElse(8)
-        val ksub = rest.lift(1).map(_.toInt).getOrElse(16)
+        val m = intArg(rest, 0, 8)
+        val ksub = intArg(rest, 1, 16)
         val e = spark.read.parquet(s"$tablesDir/embeddings_ivf")
           .drop("doc_bucket")
         val sample = e.orderBy(col("fragment_id")).limit(10000)
@@ -254,7 +221,7 @@ object Cli {
       // — a PQ codebook shape, so encode/search/sidecar/guards all reuse
       // the PQ path), 4× compression with far less distortion than PQ.
       case "sq-index" :: tablesDir :: rest =>
-        val levels = rest.headOption.map(_.toInt).getOrElse(256)
+        val levels = intArg(rest, 0, 256)
         val e = spark.read.parquet(s"$tablesDir/embeddings_ivf")
           .drop("doc_bucket")
         val sample = e.orderBy(col("fragment_id")).limit(10000)
@@ -290,9 +257,6 @@ object Cli {
           history = history.add(Generation.Turn(q, resp.answer))
         }
 
-      // Calibrate + persist the gated-fusion confidence floor for a
-      // tables dir (the [[graft.search.FusionFloor]] sidecar). Reingest
-      // refreshes it automatically; hybrid-search refuses a stale one.
       // Build the inverted lexical postings index (term-bucket-
       // partitioned BM25 postings + exact corpus-stats sidecar) — once
       // present, hybrid-search's lexical channel is a pruned read and
@@ -304,26 +268,21 @@ object Cli {
 
       // Pure lexical (BM25) top-k through the postings index: df census
       // + scoring read only the query terms' buckets. Requires the
-      // index (this verb IS the pruned path; hybrid-search carries the
-      // scan fallback for indexless tables).
+      // index (this verb IS the pruned path; the lexical channel's scan
+      // route serves hybrid-search over indexless tables).
       case "lex-search" :: tablesDir :: query :: rest =>
-        val topK = rest.headOption.map(_.toInt).getOrElse(10)
-        import graft.search.LexIndex
-        require(LexIndex.exists(tablesDir),
+        require(graft.search.LexIndex.exists(tablesDir),
           s"no lex index under $tablesDir — run lex-index first")
-        val st = LexIndex.loadStats(tablesDir)
-        LexIndex.requireFresh(st, tablesDir)
-        val qTerms = query.trim.split("[ \\t\\n\\f\\r]+")
-          .filter(_.nonEmpty).distinct.toSeq
-        val dfMap = LexIndex.dfOf(spark, tablesDir, qTerms)
-        val inCorpus = qTerms.filter(t => dfMap.getOrElse(t, 0L) > 0L)
-        val hits = LexIndex.scoreTopC(spark, tablesDir, inCorpus, dfMap,
-          st.n, st.sumDl.toDouble / st.n.toDouble, topK)
+        val (_, _, _, hits) = graft.search.LexIndex.topC(spark, tablesDir,
+          query, intArg(rest, 0, 10))
         hits.zipWithIndex.foreach { case ((id, score), i) =>
           println(f"#${i + 1}%-3d bm25=$score%.4f $id")
         }
         if (hits.isEmpty) println("(no lexical matches)")
 
+      // Calibrate + persist the gated-fusion confidence floor for a
+      // tables dir (the [[graft.search.FusionFloor]] sidecar). Reingest
+      // refreshes it automatically; hybrid-search refuses a stale one.
       case "fusion-calibrate" :: tablesDir :: Nil =>
         val frags = spark.read.parquet(s"$tablesDir/fragments")
         val a = graft.search.FusionFloor.calibrate(frags, "id", "content",
@@ -337,11 +296,9 @@ object Cli {
       // lexical-confidence gate; degrades to dense-only below the
       // calibrated floor. Hard-errors if the floor sidecar is stale.
       case "hybrid-search" :: tablesDir :: query :: rest =>
-        val topK = rest.headOption.map(_.toInt).getOrElse(10)
-        val view = rest.lift(1).filter(_.nonEmpty)
-        val lang = rest.lift(2).filter(_.nonEmpty)
-        val r = hybridSearchCommand(spark, tablesDir, query, topK,
-          view = view, lang = lang)
+        val r = hybridSearchCommand(spark, tablesDir, query,
+          intArg(rest, 0, 10), view = optArg(rest, 1),
+          lang = optArg(rest, 2))
         println(f"[hybrid-search] conf=${r.conf}%.4f floor=${r.floor}%.4f " +
           (if (r.wLex > 0) "gate=FUSED" else "gate=DENSE-ONLY"))
         // k-bounded content fetch for display (the reference's searcher
@@ -373,7 +330,7 @@ object Cli {
       // ingest / incremental index updates leave small files) back to the
       // target file size. Only fragmented partitions are touched.
       case "compact" :: tablesDir :: rest =>
-        val targetMb = rest.headOption.map(_.toInt).getOrElse(128)
+        val targetMb = intArg(rest, 0, 128)
         val tables = Seq(
           "documents" -> "id", "concepts" -> "document_id",
           "fragments" -> "document_id", "parents" -> "document_id",
@@ -461,7 +418,8 @@ object Cli {
 
       case _ =>
         System.err.println(
-          "usage: ingest <out> <files...> | reingest <tables> <files...> | " +
+          "usage ([optional] given as - or \"\" keeps its default): " +
+            "ingest <out> <files...> | reingest <tables> <files...> | " +
             "search <tables> <query> [k] [view] [lang] | " +
             "index <tables> [k] [replicas] | " +
             "ann-search <tables> <query> [k] [nprobe] [view] | " +
@@ -484,6 +442,15 @@ object Cli {
     }
     spark.stop()
   }
+
+  /** Optional positional argument `i` of a verb's trailing arguments:
+    * absent when missing, empty or the `-` placeholder. */
+  private[graft] def optArg(rest: List[String], i: Int): Option[String] =
+    rest.lift(i).filter(a => a.nonEmpty && a != "-")
+
+  /** [[optArg]] as an integer, `default` when absent. */
+  private[graft] def intArg(rest: List[String], i: Int, default: Int): Int =
+    optArg(rest, i).map(_.toInt).getOrElse(default)
 
   private[graft] def readDocFiles(spark: org.apache.spark.sql.SparkSession,
       files: List[String]): org.apache.spark.sql.Dataset[DocInput] = {
@@ -654,29 +621,30 @@ object Cli {
   private[graft] final case class HybridResult(conf: Double, floor: Double,
       wLex: Double, hits: Seq[(String, Long, Long, Double)])
 
-  /** The gated hybrid serving path over a tables dir: exact BM25 over
-    * fragment content (one codegen'd scan — tf per query term via a
-    * higher-order array filter, corpus stats collected as ONE metadata
-    * row) fused with the dense KNN channel by weighted RRF under the
-    * [[graft.search.FusionGate]] lexical-confidence gate. The floor
-    * comes from the maintained sidecar and serving REFUSES a floor
-    * whose corpus fingerprint no longer matches the fragments table —
-    * a reingest without the floor refresh step must be loud, not a
-    * silent mis-gate.
+  /** The gated hybrid serving path over a tables dir: the lexical
+    * channel ([[graft.search.LexIndex.topC]] — the postings index when
+    * built, else a corpus scan, bit-for-bit equal) fused with the dense
+    * channel ([[graft.search.VectorSearch.dense]] — the routed graph,
+    * else the flat graph, else the exact KNN scan) by weighted RRF under
+    * the [[graft.search.FusionGate]] lexical-confidence gate. Explicit
+    * view/lang filters win; otherwise the rule-based self-query stage
+    * fills them from the query text, and the scope restricts both
+    * channels' candidates before rank while corpus statistics stay
+    * global. The floor comes from the maintained sidecar and serving
+    * REFUSES a floor whose fingerprint no longer matches the fragments
+    * table — a reingest without the floor refresh step must be loud,
+    * not a silent mis-gate.
     */
   private[graft] def hybridSearchCommand(
       spark: org.apache.spark.sql.SparkSession, tablesDir: String,
       query: String, topK: Int, c: Int = 30,
       view: Option[String] = None, lang: Option[String] = None,
       applySelfQuery: Boolean = true): HybridResult = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    import graft.search.{FusionFloor, FusionGate, VectorSearch}
+    import graft.search.{FusionFloor, FusionGate, LexIndex, VectorSearch}
     val floorPath = s"$tablesDir/fusion_floor.txt"
     require(FusionFloor.exists(floorPath),
       s"no fusion floor at $floorPath — run fusion-calibrate (or ingest " +
         "through Cli reingest) first")
-    val frags = spark.read.parquet(s"$tablesDir/fragments")
     // explicit filters win; otherwise the rule-based self-query stage
     // (E6/X16 — the reference composes optimizer → searcher this way)
     // fills view/lang hints from the query text
@@ -686,150 +654,23 @@ object Cli {
       else graft.api.SelfQuery.Filters(None, None)
     val effView = view.orElse(hints.view)
     val effLang = lang.orElse(hints.lang)
-    // metadata scoping (F1/F2 applied to the hybrid path): both channels
-    // filter BEFORE rank; corpus statistics (df/n/avgdl, the floor) stay
-    // global — the predicate restricts candidates, not the language model
-    val eligibleIds =
-      if (effView.isEmpty && effLang.isEmpty) None
-      else Some(Seq(
-        effView.map(v => col("view") === v),
-        effLang.map(l => col("language") === l))
-        .flatten.foldLeft(frags)((df, p) => df.filter(p))
-        .select(col("id").cast("string").as("id")))
     val art = FusionFloor.load(floorPath)
     // stamped sidecars validate against the table's file listing —
     // freshness costs a directory list, not a corpus scan (legacy
-    // sidecars fall back to the exact fingerprint pass)
+    // sidecars fall back to the exact fingerprint pass, the serve's only
+    // open of `fragments` outside the lexical channel)
     FusionFloor.requireFreshAt(art, s"$tablesDir/fragments", floorPath)(
-      FusionFloor.currentFp(frags, "id", "content"))
-    // lexical channel: query terms under the same whitespace rule as
-    // calibration. With a lex_postings index present, stats come from
-    // its sidecar and df/scoring read ONLY the query terms' partition
-    // cells (a pruned read, ~|q|/256 of the index); without one, the
-    // scan fallback pays the corpus passes. Both paths are bit-for-bit
-    // equal (LexIndexSpec pins it): same integer facts, same fixed-order
-    // literal-idf fold, and both return only fragments containing ≥1
-    // in-corpus term (score > 0 strictly).
-    val qTerms = query.trim.split("[ \\t\\n\\f\\r]+")
-      .filter(_.nonEmpty).distinct.toSeq
-    import graft.search.LexIndex
-    val (n, avgdl, dfMap, scoreTopC) =
-      if (LexIndex.exists(tablesDir)) {
-        val lexSt = LexIndex.loadStats(tablesDir)
-        LexIndex.requireFresh(lexSt, tablesDir)
-        val n0 = lexSt.n
-        val avgdl0 = lexSt.sumDl.toDouble / n0.toDouble
-        val dfMap0 = LexIndex.dfOf(spark, tablesDir, qTerms)
-        val scorer = (inC: Seq[String]) =>
-          LexIndex.scoreTopC(spark, tablesDir, inC, dfMap0, n0, avgdl0, c,
-            eligible = eligibleIds)
-        (n0, avgdl0, dfMap0, scorer)
-      } else {
-        val toks = frags.select(col("id").cast("string").as("id"),
-          graft.functions.TextSketch.words(col("content")).as("w"))
-        val st = toks.agg(count(lit(1)).as("n"),
-          sum(size(col("w"))).as("sum_dl")).head()
-        val n0 = st.getLong(0)
-        val avgdl0 = st.getLong(1).toDouble / n0.toDouble
-        val dfMap0: Map[String, Long] = toks
-          .select(explode(array_distinct(col("w"))).as("t"))
-          .filter(col("t").isin(qTerms: _*))
-          .groupBy(col("t")).agg(count(lit(1)).as("df"))
-          .as[(String, Long)].collect().toMap
-        val scorer = (inC: Seq[String]) => {
-          val termScores = inC.map { t =>
-            val idfT = FusionGate.idf(dfMap0(t), n0)
-            val tf =
-              size(filter(col("w"), x => x === lit(t))).cast("double")
-            lit(idfT) * (tf * lit(FusionGate.K1 + 1)) /
-              (tf + lit(FusionGate.K1) * (lit(1 - FusionGate.B) +
-                lit(FusionGate.B) *
-                  (size(col("w")).cast("double") / lit(avgdl0))))
-          }
-          eligibleIds.fold(toks)(e => toks.join(e, Seq("id"), "left_semi"))
-            .select(col("id"), termScores.reduce(_ + _).as("bm25"))
-            .filter(col("bm25") > 0d)
-            .orderBy(col("bm25").desc, col("id")).limit(c)
-            .as[(String, Double)].collect().toSeq
-        }
-        (n0, avgdl0, dfMap0, scorer)
-      }
-    val inCorpus = qTerms.filter(t => dfMap.getOrElse(t, 0L) > 0L)
-    val lexScored: Seq[(String, Double)] =
-      if (inCorpus.isEmpty) Nil else scoreTopC(inCorpus)
+      FusionFloor.currentFp(spark.read.parquet(s"$tablesDir/fragments"),
+        "id", "content"))
+    val (n, dfMap, inCorpus, lexScored) =
+      LexIndex.topC(spark, tablesDir, query, c, effView, effLang)
     val idfSum = inCorpus.map(t => FusionGate.idf(dfMap(t), n)).sum
     val conf = FusionGate.confidence(
       lexScored.headOption.map(_._2).getOrElse(0.0), idfSum)
     val wLex = FusionGate.lexWeight(conf, art.floor)
-    // dense channel: a persisted graph index serves when one exists —
-    // the routed layout walks only its R nearest cells
-    // (spark.graft.ann.hnsw.probeCells, partition-pruned; R ≥ cells
-    // degenerates to the full fan-out THROUGH the replica-deduped
-    // routed walk), the flat layout fans out over its shards — with the
-    // exact KNN scan as the indexless fallback. Both indexes are
-    // reingest-maintained (the lex/floor consistency contract), and
-    // their own guards (router_hash, searchIndexRouted's fingerprint
-    // check) refuse torn artifacts.
-    val routedPath = s"$tablesDir/embeddings_hnsw_routed"
-    val hnswPath = s"$tablesDir/embeddings_hnsw"
-    val denseEf = 64
-    // graph walks take the predicate through a metadata join (the
-    // adjacency holds no metadata; eligibility evaluates once per node
-    // and the bounded beam accepts eligible nodes only — the
-    // hnsw-search verbs' filtered-walk contract)
-    def withViewPred(index: org.apache.spark.sql.DataFrame)
-        : (org.apache.spark.sql.DataFrame,
-           Option[org.apache.spark.sql.Column]) =
-      if (effView.isEmpty && effLang.isEmpty) (index, None)
-      else {
-        val meta = spark.read.parquet(s"$tablesDir/embeddings")
-          .select(col("fragment_id").as("__fid"),
-            col("view").as("__view"), col("lang").as("__lang"))
-        val pred = Seq(
-          effView.map(v => col("__view") === v),
-          effLang.map(l => col("__lang") === l))
-          .flatten.reduce(_ && _)
-        (index.join(meta, col("fragment_id") === col("__fid"), "left"),
-          Some(pred))
-      }
-    val vecIds: Seq[String] =
-      if (java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(routedPath))) {
-        val router = graft.search.Ivf.load(s"$routedPath.router.txt")
-        val qvec = new OfflineEmbedder(router.dim).embedQuery(query)
-        val r = try spark.conf.get(
-            org.apache.spark.sql.graft.HnswIndexRewrite.ProbeCellsKey,
-            org.apache.spark.sql.graft.HnswIndexRewrite
-              .DefaultProbeCells.toString).toInt
-          catch { case _: NumberFormatException =>
-            org.apache.spark.sql.graft.HnswIndexRewrite.DefaultProbeCells }
-        val (searchable, pred) =
-          withViewPred(spark.read.parquet(routedPath))
-        graft.search.Hnsw
-          .searchIndexRouted(searchable, Seq(("q", qvec)), c, denseEf,
-            router, probeShards = r, predicate = pred)
-          .orderBy(col("rank"))
-          .select(col("fragment_id")).as[String].collect().toSeq
-      } else if (java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(hnswPath))) {
-        val index = spark.read.parquet(hnswPath)
-        val dim = index.select(col("vector")).head()
-          .getAs[scala.collection.Seq[Float]](0).length
-        val qvec = new OfflineEmbedder(dim).embedQuery(query)
-        val (searchable, pred) = withViewPred(index)
-        graft.search.Hnsw
-          .searchIndex(searchable, Seq(("q", qvec)), c, denseEf,
-            predicate = pred)
-          .orderBy(col("rank"))
-          .select(col("fragment_id")).as[String].collect().toSeq
-      } else {
-        val emb = spark.read.parquet(s"$tablesDir/embeddings")
-        val dim = emb.select(col("vector")).head()
-          .getAs[scala.collection.Seq[Float]](0).length
-        val qvec = new OfflineEmbedder(dim).embedQuery(query)
-        VectorSearch.knn(emb, qvec, c, view = effView, lang = effLang)
-          .select(col("fragment_id")).as[String].collect().toSeq
-      }
+    val vecIds = VectorSearch.dense(spark, tablesDir, query, c, ef = 64,
+      effView, effLang, VectorSearch.preferredRoute(spark, tablesDir))
+      .map(_._1)
     HybridResult(conf, art.floor, wLex,
       FusionGate.fuseIds(lexScored.map(_._1), vecIds, wLex).take(topK))
   }
@@ -844,13 +685,13 @@ object Cli {
   private def quantizedSearch(spark: org.apache.spark.sql.SparkSession,
       tablesDir: String, query: String, rest: List[String],
       indexName: String, cbName: String, reindexCmd: String): Unit = {
-    val topK = rest.headOption.map(_.toInt).getOrElse(10)
-    val nprobe = rest.lift(1).map(_.toInt).getOrElse(2)
-    val shortlist = rest.lift(2).map(_.toInt).getOrElse(100)
+    val topK = intArg(rest, 0, 10)
+    val nprobe = intArg(rest, 1, 2)
+    val shortlist = intArg(rest, 2, 100)
     // optional metadata filter: eligibility applies BEFORE the ADC
     // shortlist (filter-before-rank, same contract as the other index
     // search verbs)
-    val view = rest.lift(3).filter(_.nonEmpty)
+    val view = optArg(rest, 3)
     val q = graft.search.Ivf.load(s"$tablesDir/ivf_quantizer.txt")
     val cb = graft.search.Pq.load(s"$tablesDir/$cbName")
     val index = spark.read.parquet(s"$tablesDir/$indexName")
@@ -880,6 +721,13 @@ object Cli {
       .collect()
     printRowHits(hits)
   }
+
+  /** (fragment_id, similarity) hit formatter for the graph search
+    * commands. */
+  private def printDenseHits(hits: Seq[(String, Double)]): Unit =
+    hits.zipWithIndex.foreach { case ((id, sim), i) =>
+      println(f"#${i + 1}%-3d sim=$sim%.4f $id")
+    }
 
   /** Shared (fragment_id, view, similarity) hit formatter for the ANN
     * search commands.

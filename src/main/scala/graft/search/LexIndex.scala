@@ -562,6 +562,75 @@ object LexIndex {
   def ubOf(dfT: Long, n: Long): Double =
     FusionGate.idf(dfT, n) * (FusionGate.K1 + 1)
 
+  /** A query's terms under the calibration whitespace rule, distinct
+    * and in first-occurrence order (the fixed order every fold sums
+    * in). */
+  def queryTerms(query: String): Seq[String] =
+    query.trim.split("[ \\t\\n\\f\\r]+").filter(_.nonEmpty).distinct.toSeq
+
+  /** The lexical channel: BM25 top-`c` of `query` over a tables dir, as
+    * `(n, df per term, in-corpus terms, hits)` — through the index when
+    * built (a stale one is refused), else through the scan route, which
+    * is bit-for-bit equal. A view/lang scope restricts the candidates,
+    * never the statistics; `fragments` is opened only for a scope or
+    * the scan route. */
+  def topC(spark: SparkSession, tablesDir: String, query: String, c: Int,
+      view: Option[String] = None, lang: Option[String] = None)
+      : (Long, Map[String, Long], Seq[String], Seq[(String, Double)]) = {
+    val qTerms = queryTerms(query)
+    lazy val frags = spark.read.parquet(s"$tablesDir/fragments")
+    val eligible =
+      if (view.isEmpty && lang.isEmpty) None
+      else Some(Seq(view.map(col("view") === _),
+        lang.map(col("language") === _)).flatten
+        .foldLeft(frags)((df, p) => df.filter(p))
+        .select(col("id").cast("string").as("id")))
+    val (n, dfMap, score) =
+      if (exists(tablesDir)) {
+        val st = loadStats(tablesDir)
+        requireFresh(st, tablesDir)
+        val avgdl = st.sumDl.toDouble / st.n.toDouble
+        val df = dfOf(spark, tablesDir, qTerms)
+        (st.n, df, (inC: Seq[String]) =>
+          scoreTopC(spark, tablesDir, inC, df, st.n, avgdl, c, eligible))
+      } else scanRoute(spark, frags, qTerms, c, eligible)
+    val inCorpus = qTerms.filter(t => dfMap.getOrElse(t, 0L) > 0L)
+    (n, dfMap, inCorpus, if (inCorpus.isEmpty) Nil else score(inCorpus))
+  }
+
+  /** [[topC]] without an index: corpus stats, df census and scoring are
+    * passes over the tokenized fragments table. */
+  private def scanRoute(spark: SparkSession, frags: DataFrame,
+      qTerms: Seq[String], c: Int, eligible: Option[DataFrame])
+      : (Long, Map[String, Long], Seq[String] => Seq[(String, Double)]) = {
+    import spark.implicits._
+    val toks = frags.select(
+      col("id").cast("string").as("id"),
+      graft.functions.TextSketch.words(col("content")).as("w"))
+    val st = toks.agg(count(lit(1)).as("n"),
+      sum(size(col("w"))).as("sum_dl")).head()
+    val n = st.getLong(0)
+    val avgdl = st.getLong(1).toDouble / n.toDouble
+    val dfMap: Map[String, Long] = toks
+      .select(explode(array_distinct(col("w"))).as("t"))
+      .filter(col("t").isin(qTerms: _*))
+      .groupBy(col("t")).agg(count(lit(1)).as("df"))
+      .as[(String, Long)].collect().toMap
+    val score = (inCorpus: Seq[String]) => {
+      val termScores = inCorpus.map { t =>
+        bm25Term(FusionGate.idf(dfMap(t), n),
+          size(filter(col("w"), x => x === lit(t))).cast("double"),
+          size(col("w")).cast("double"), avgdl)
+      }
+      eligible.fold(toks)(e => toks.join(e, Seq("id"), "left_semi"))
+        .select(col("id"), termScores.reduce(_ + _).as("bm25"))
+        .filter(col("bm25") > 0d)
+        .orderBy(col("bm25").desc, col("id")).limit(c)
+        .as[(String, Double)].collect().toSeq
+    }
+    (n, dfMap, score)
+  }
+
   /** BM25 top-`c` over the pruned postings — bit-for-bit the scan
     * path's scores: per-fragment term contributions pivot out of the
     * postings (`sum(when(term = t, tf) else 0)` is the exact integer
@@ -621,41 +690,12 @@ object LexIndex {
       avgdl: Double, c: Int, eligible: Option[DataFrame],
       restrictTo: Option[Seq[String]]): Seq[(String, Double)] = {
     import spark.implicits._
-    // metadata scoping is FILTER-BEFORE-RANK (the F1/F2 contract):
-    // `eligible` (a one-column "id" set, e.g. fragments of one view)
-    // semi-joins into the pruned postings before any score or limit.
-    // Corpus statistics (df/n/avgdl) stay GLOBAL — the Postgres
-    // FTS-with-WHERE semantics the reference pairs pgvector with: the
-    // predicate restricts candidates, not the language model.
-    val pruned0 = prunedPostings(spark, tablesDir, inCorpus)
-    val pruned1 = eligible.fold(pruned0)(e =>
-      pruned0.join(e.select(col("id")), Seq("id"), "left_semi"))
-    // candidate restriction (the MaxScore route): an IN predicate the
-    // scan pushes into the (term, id)-sorted row groups/pages — a
-    // candidate's rows sit in one id run per term, so parquet stats
-    // skip the rest. Spark rewrites an IN wider than
-    // parquet.pushdown.inFilterThreshold into a min/max range (useless
-    // over ids spanning the corpus), so the threshold is raised past
-    // the candidate cap for this one read.
-    val pruned = restrictTo.fold(pruned1)(ids =>
-      pruned1.filter(col("id").isin(ids: _*)))
-    val tfCols: Seq[Column] = inCorpus.zipWithIndex.map { case (t, i) =>
-      sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"tf_$i")
-    }
-    val perFrag = pruned.groupBy(col("id"), col("dl")).agg(
-      tfCols.head, tfCols.tail: _*)
-    val termScores: Seq[Column] = inCorpus.zipWithIndex.map {
-      case (t, i) =>
-        val idfT = FusionGate.idf(dfMap(t), n)
-        val tf = col(s"tf_$i").cast("double")
-        lit(idfT) * (tf * lit(FusionGate.K1 + 1)) /
-          (tf + lit(FusionGate.K1) * (lit(1 - FusionGate.B) +
-            lit(FusionGate.B) *
-              (col("dl").cast("double") / lit(avgdl))))
-    }
-    val top = perFrag
-      .select(col("id"), termScores.reduce(_ + _).as("bm25"))
+    val top = foldPostings(spark, tablesDir, inCorpus, eligible,
+      restrictTo, dfMap, n, avgdl, "bm25")
       .orderBy(col("bm25").desc, col("id")).limit(c)
+    // Spark rewrites an IN wider than parquet.pushdown.inFilterThreshold
+    // into a min/max range (useless over ids spanning the corpus), so
+    // the threshold is raised past the candidate cap for this one read
     if (restrictTo.isEmpty) top.as[(String, Double)].collect().toSeq
     else withInThreshold(spark,
       restrictTo.get.size) { top.as[(String, Double)].collect().toSeq }
@@ -695,28 +735,12 @@ object LexIndex {
     // tf/dl) and a tie cohort straddling the threshold must fit or the
     // route valves
     val candCap = math.max(32 * c, 2048)
-    val prunedR0 = prunedPostings(spark, tablesDir, rare)
-    val prunedR = eligible.fold(prunedR0)(e =>
-      prunedR0.join(e.select(col("id")), Seq("id"), "left_semi"))
-    val tfColsR: Seq[Column] = rare.zipWithIndex.map { case (t, i) =>
-      sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"tf_$i")
-    }
-    val perFragR = prunedR.groupBy(col("id"), col("dl")).agg(
-      tfColsR.head, tfColsR.tail: _*)
-    val termScoresR: Seq[Column] = rare.zipWithIndex.map { case (t, i) =>
-      val idfT = FusionGate.idf(dfMap(t), n)
-      val tf = col(s"tf_$i").cast("double")
-      lit(idfT) * (tf * lit(FusionGate.K1 + 1)) /
-        (tf + lit(FusionGate.K1) * (lit(1 - FusionGate.B) +
-          lit(FusionGate.B) *
-            (col("dl").cast("double") / lit(avgdl))))
-    }
     // ONE job yields the c-th rare score AND the candidate set: every
     // candidate (rbm25 > thr, thr < mC) outranks the threshold, so all
     // of them sit inside the top-(cap+1) rows; a (cap+1)-th row still
     // above thr means the tie cohort overflows the cap → valve
-    val top = perFragR
-      .select(col("id"), termScoresR.reduce(_ + _).as("rbm25"))
+    val top = foldPostings(spark, tablesDir, rare, eligible, None, dfMap,
+      n, avgdl, "rbm25")
       .orderBy(col("rbm25").desc, col("id")).limit(candCap + 1)
       .as[(String, Double)].collect()
     // fewer than c rare-scored docs: common-only docs could fill the
@@ -731,4 +755,48 @@ object LexIndex {
     Some(exactTopC(spark, tablesDir, inCorpus, dfMap, n, avgdl, c,
       eligible, restrictTo = Some(cand)))
   }
+
+  /** (id, `as`) per fragment holding any of `terms`: each term's tf
+    * pivots out of the pruned postings (`sum(when(term = t, tf) else 0)`
+    * is the exact integer the scan route's array filter counts) and the
+    * [[bm25Term]]s sum in the fixed `terms` order. */
+  private def foldPostings(spark: SparkSession, tablesDir: String,
+      terms: Seq[String], eligible: Option[DataFrame],
+      restrictTo: Option[Seq[String]], dfMap: Map[String, Long], n: Long,
+      avgdl: Double, as: String): DataFrame = {
+    // metadata scoping is FILTER-BEFORE-RANK (the F1/F2 contract):
+    // `eligible` (a one-column "id" set, e.g. fragments of one view)
+    // semi-joins into the pruned postings before any score or limit.
+    // Corpus statistics (df/n/avgdl) stay GLOBAL — the Postgres
+    // FTS-with-WHERE semantics the reference pairs pgvector with: the
+    // predicate restricts candidates, not the language model.
+    val pruned0 = prunedPostings(spark, tablesDir, terms)
+    val pruned1 = eligible.fold(pruned0)(e =>
+      pruned0.join(e.select(col("id")), Seq("id"), "left_semi"))
+    // candidate restriction (the MaxScore route): an IN predicate the
+    // scan pushes into the (term, id)-sorted row groups/pages — a
+    // candidate's rows sit in one id run per term, so parquet stats
+    // skip the rest
+    val postings = restrictTo.fold(pruned1)(ids =>
+      pruned1.filter(col("id").isin(ids: _*)))
+    val tfCols: Seq[Column] = terms.zipWithIndex.map { case (t, i) =>
+      sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"tf_$i")
+    }
+    val termScores = terms.zipWithIndex.map { case (t, i) =>
+      bm25Term(FusionGate.idf(dfMap(t), n), col(s"tf_$i").cast("double"),
+        col("dl").cast("double"), avgdl)
+    }
+    postings.groupBy(col("id"), col("dl")).agg(tfCols.head, tfCols.tail: _*)
+      .select(col("id"), termScores.reduce(_ + _).as(as))
+  }
+
+  /** One term's BM25 contribution, `tf` and `dl` as double columns —
+    * the single expression every route builds, so the literal-idf
+    * expression shape (and with it every double) is the same on the
+    * postings and the scan route. */
+  private def bm25Term(idfT: Double, tf: Column, dl: Column,
+      avgdl: Double): Column =
+    lit(idfT) * (tf * lit(FusionGate.K1 + 1)) /
+      (tf + lit(FusionGate.K1) * (lit(1 - FusionGate.B) +
+        lit(FusionGate.B) * (dl / lit(avgdl))))
 }

@@ -1,6 +1,8 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -70,6 +72,77 @@ object VectorSearch {
         cosine(col(vectorCol), lit(queryVec)))
       .orderBy(col("similarity").desc, col(tieBreak))
       .limit(k)
+  }
+
+  /** The persisted artifact that serves [[dense]]. */
+  sealed trait DenseRoute
+  /** The routed graph `embeddings_hnsw_routed`, walked over its
+    * `probeCells` nearest cells (≥ cells is the full fan-out, still
+    * through the replica-deduped routed walk). */
+  final case class RoutedGraph(probeCells: Int) extends DenseRoute
+  /** The flat graph `embeddings_hnsw`, walked over every shard. */
+  case object FlatGraph extends DenseRoute
+  /** The exact [[knn]] scan over `embeddings` (no index). */
+  case object ExactScan extends DenseRoute
+
+  /** The hybrid serve's preference over what a tables dir holds: the
+    * routed graph at the session's probe cells, else the flat graph,
+    * else the exact scan. */
+  def preferredRoute(spark: SparkSession, tablesDir: String): DenseRoute =
+    if (Files.isDirectory(Paths.get(s"$tablesDir/embeddings_hnsw_routed")))
+      RoutedGraph(org.apache.spark.sql.graft.HnswIndexRewrite
+        .probeCells(spark))
+    else if (Files.isDirectory(Paths.get(s"$tablesDir/embeddings_hnsw")))
+      FlatGraph
+    else ExactScan
+
+  /** The dense channel: top-`c` `(fragment_id, similarity)` of `query`
+    * over a tables dir through `route`, in rank order, the query
+    * embedded at the artifact's dimension. A view/lang scope filters
+    * before rank: the graph adjacency holds no metadata, so eligibility
+    * joins on from `embeddings` once per node and the bounded beam
+    * accepts eligible nodes only. */
+  def dense(spark: SparkSession, tablesDir: String, query: String, c: Int,
+      ef: Int, view: Option[String], lang: Option[String],
+      route: DenseRoute): Seq[(String, Double)] = {
+    def embed(dim: Int) =
+      new graft.embedding.OfflineEmbedder(dim).embedQuery(query)
+    def dimOf(df: DataFrame, name: String, rebuild: String): Int = {
+      val first = df.select(col("vector")).head(1)
+      require(first.nonEmpty,
+        s"$name under $tablesDir is empty; re-run $rebuild")
+      first(0).getAs[scala.collection.Seq[Float]](0).length
+    }
+    def scoped(index: DataFrame): (DataFrame, Option[Column]) =
+      if (view.isEmpty && lang.isEmpty) (index, None)
+      else {
+        val meta = spark.read.parquet(s"$tablesDir/embeddings")
+          .select(col("fragment_id").as("__fid"),
+            col("view").as("__view"), col("lang").as("__lang"))
+        (index.join(meta, col("fragment_id") === col("__fid"), "left"),
+          Some(Seq(view.map(col("__view") === _),
+            lang.map(col("__lang") === _)).flatten.reduce(_ && _)))
+      }
+    val hits = route match {
+      case RoutedGraph(r) =>
+        val path = s"$tablesDir/embeddings_hnsw_routed"
+        val router = Ivf.load(s"$path.router.txt")
+        val (searchable, pred) = scoped(spark.read.parquet(path))
+        Hnsw.searchIndexRouted(searchable, Seq(("q", embed(router.dim))),
+          c, ef, router, probeShards = r, predicate = pred)
+          .orderBy(col("rank"))
+      case FlatGraph =>
+        val index = spark.read.parquet(s"$tablesDir/embeddings_hnsw")
+        val qvec = embed(dimOf(index, "embeddings_hnsw", "hnsw-index"))
+        val (searchable, pred) = scoped(index)
+        Hnsw.searchIndex(searchable, Seq(("q", qvec)), c, ef,
+          predicate = pred).orderBy(col("rank"))
+      case ExactScan =>
+        val emb = spark.read.parquet(s"$tablesDir/embeddings")
+        knn(emb, embed(dimOf(emb, "embeddings", "ingest")), c, view, lang)
+    }
+    hits.select(col("fragment_id"), col("similarity")).collect()
+      .map(r => (r.getString(0), r.getDouble(1))).toSeq
   }
 
   /** A2 with the over-fetch fix: the reference dedupes AFTER limit and can

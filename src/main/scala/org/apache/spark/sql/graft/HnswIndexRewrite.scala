@@ -275,9 +275,7 @@ case class HnswIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         if (new java.io.File(routerPath).isFile)
           Some(graft.search.Ivf.load(routerPath))
         else None
-      val probeCells =
-        try spark.conf.get(ProbeCellsKey, DefaultProbeCells.toString).toInt
-        catch { case _: NumberFormatException => DefaultProbeCells }
+      val probeCells = HnswIndexRewrite.probeCells(spark)
       logInfo(s"HNSW rewrite: serving top-$k (ef=$ef" +
         predOpt.map(_ => ", filtered").getOrElse("") +
         router.map(r => s", routed R=${math.min(probeCells, r.k)}/${r.k}")
@@ -404,6 +402,12 @@ object HnswIndexRewrite {
     * knob (R=6 at replicas=3). */
   val ProbeCellsKey = "spark.graft.ann.hnsw.probeCells"
   val DefaultProbeCells = 6
+
+  /** The session's [[ProbeCellsKey]]; unset or unparsable reads as
+    * [[DefaultProbeCells]]. */
+  def probeCells(spark: SparkSession): Int =
+    try spark.conf.get(ProbeCellsKey, DefaultProbeCells.toString).toInt
+    catch { case _: NumberFormatException => DefaultProbeCells }
 
   private val MetaIdCol = "__graft_hnsw_meta_id"
   private val MetaCol = "__graft_hnsw_meta_"

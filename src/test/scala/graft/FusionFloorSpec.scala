@@ -174,6 +174,21 @@ class FusionFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(viaFlat == exact,
       s"flat-index dense channel diverged:\n$viaFlat\nvs\n$exact")
 
+    // hnsw-search's path with a view: every hit carries that view, and a
+    // view no fragment has yields no hits
+    import graft.search.VectorSearch.{FlatGraph, RoutedGraph, dense}
+    val viewOf = e.select("fragment_id", "view").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    viewOf.values.toSeq.distinct.foreach { v =>
+      val hits = dense(spark, td, query, 5, 64, Some(v), None, FlatGraph)
+      assert(hits.nonEmpty && hits.forall(h => viewOf(h._1) == v),
+        s"view=$v walk returned $hits")
+    }
+    assert(dense(spark, td, query, 5, 64, Some("no-such-view"), None,
+      FlatGraph).isEmpty)
+    val flatIds = dense(spark, td, query, 5, 64, None, None, FlatGraph)
+      .map(_._1)
+
     // routed graph index takes precedence; probeCells = cells is the
     // full fan-out THROUGH the replica-deduped routed walk -> identical
     val sample = e.select(col("vector")).collect()
@@ -190,6 +205,38 @@ class FusionFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"routed-index dense channel diverged:\n$viaRouted\nvs\n$exact")
     } finally spark.conf.unset(
       org.apache.spark.sql.graft.HnswIndexRewrite.ProbeCellsKey)
+
+    // hnsw-search-routed's path: R >= cells returns the flat walk's ids
+    assert(dense(spark, td, query, 5, 64, None, None, RoutedGraph(router.k))
+      .map(_._1) == flatIds)
+  }
+
+  test("an empty dense artifact is an actionable error naming the verb " +
+      "that rebuilds it") {
+    val engine = new Engine(spark, new OfflineEmbedder(64))
+    val td = s"$dir/tables5"
+    ingestTables(td, List(writeDoc("g.txt",
+      "hotel document about graph walks over an emptied index")), engine)
+    calibrateAt(td)
+    val emb = spark.read.parquet(s"$td/embeddings")
+    emb.limit(0).write.parquet(s"$td/embeddings_hnsw")
+    val e1 = intercept[IllegalArgumentException] {
+      Cli.hybridSearchCommand(spark, td, "graph walks", 5)
+    }
+    assert(e1.getMessage.contains("embeddings_hnsw") &&
+      e1.getMessage.contains("hnsw-index"), e1.getMessage)
+
+    // the indexless exact scan over an empty embeddings table likewise
+    graft.ingest.TableSwap.rmTreeAt(s"$td/embeddings_hnsw")
+    emb.limit(0).write.parquet(s"$td/embeddings_empty")
+    graft.ingest.TableSwap.rmTreeAt(s"$td/embeddings")
+    Files.move(Paths.get(s"$td/embeddings_empty"),
+      Paths.get(s"$td/embeddings"))
+    val e2 = intercept[IllegalArgumentException] {
+      Cli.hybridSearchCommand(spark, td, "graph walks", 5)
+    }
+    assert(e2.getMessage.contains("embeddings under") &&
+      e2.getMessage.contains("ingest"), e2.getMessage)
   }
 
   private def calibrateAt(td: String): Unit = {

@@ -144,6 +144,17 @@ class LexIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(Paths.get(LexIndex.statsPath(td)), sb2)
     assert(idxV == scanV,
       s"scoped pruned path diverged from scan:\n$idxV\nvs\n$scanV")
+
+    // lex-search's path: the lexical channel at c = k through the index
+    // is the scan route's top-k
+    val lexIdx = LexIndex.topC(spark, td, query, 3)._4
+    val sb3 = Files.readAllBytes(Paths.get(LexIndex.statsPath(td)))
+    Files.delete(Paths.get(LexIndex.statsPath(td)))
+    val lexScan = LexIndex.topC(spark, td, query, 3)._4
+    Files.write(Paths.get(LexIndex.statsPath(td)), sb3)
+    assert(lexIdx.nonEmpty)
+    assert(lexIdx == lexScan,
+      s"index top-k diverged from the scan route:\n$lexIdx\nvs\n$lexScan")
   }
 
   test("pruned reads carry the term buckets into PartitionFilters") {

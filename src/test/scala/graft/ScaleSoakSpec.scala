@@ -1424,8 +1424,7 @@ class ScaleSoakSpec extends AnyFunSuite with BeforeAndAfterAll {
       // probed volume on both channels (stamped + gated). Lex: only the
       // query terms' buckets. Dense: ~R/cells of the replicated index —
       // replication cancels in the probed/index ratio (ADVICE r14).
-      val qTerms = query.trim.split("[ \\t\\n\\f\\r]+")
-        .filter(_.nonEmpty).distinct.toSeq
+      val qTerms = LexIndex.queryTerms(query)
       val lexIndexRows = s.read.parquet(LexIndex.indexPath(td)).count()
       val lexProbed = LexIndex.prunedPostings(s, td, qTerms).count()
       val lexFrac = lexProbed.toDouble / lexIndexRows.toDouble
