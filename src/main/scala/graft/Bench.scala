@@ -394,7 +394,7 @@ object Bench {
         val tb0 = System.nanoTime()
         graft.queries.WriteTimeTables.persistAll(spark, sfDir, root)
         val buildSec = (System.nanoTime() - tb0) / 1e9
-        // drop memoized compute-stages so the timed passes genuinely
+        // drop memoized stages and values so the timed passes genuinely
         // read the persisted tables, not the main run's memory residue
         graft.queries.StageCache.release(spark)
         spark.conf.set(graft.queries.StageCache.PathConf, root)

@@ -67,13 +67,14 @@ object MediaQueries {
   private[queries] val V23ResCbDir = "localdata/v23-rescodebook"
 
   /** Session-memoized exact integer fingerprint of the embeddings corpus
-    * (the g6 recipe — [[SamplingQueries.g6CorpusFp]]). */
+    * (the g6 recipe — [[SamplingQueries.g6CorpusFp]]): one Spark job per
+    * corpus, guarded by the source files' stat fingerprint. */
   private[queries] def embCorpusFp(s: SparkSession, dir: String): Long =
-    StageCache.getOrCache(s, s"emb_corpus_fp:$dir") {
-      import s.implicits._
-      Seq(SamplingQueries.g6CorpusFp(Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding")))).toDF("v")
-    }.head().getLong(0)
+    StageCache.memo(s, s"emb_corpus_fp:$dir", StageCache.sourceFingerprint(
+        Seq(s"$dir/embeddings.parquet"), "g6")) {
+      SamplingQueries.g6CorpusFp(Tables.embeddings(s, dir)
+        .select(col("vec_id"), col("embedding")))
+    }
 
   private def writeCentroidArtifact(s: SparkSession, dir: String,
       q: Ivf.Quantizer, artDir: String): Unit = {
@@ -117,22 +118,16 @@ object MediaQueries {
   // (parquet float/double), so artifacts are byte-identical whether a
   // pass trained or loaded.
 
-  private[queries] val trainedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
-
-  private def acquireTrained[T <: AnyRef](s: SparkSession, artDir: String,
+  private def acquireTrained[T](s: SparkSession, artDir: String,
       dir: String, knobs: String)(train: => T)(write: T => Unit)(
       load: Long => T): T = {
     val fp = embCorpusFp(s, dir)
-    val key = s"$artDir|$fp|$knobs"
-    val hit = trainedMemo.get(key)
-    if (hit != null) return hit.asInstanceOf[T]
-    val sidecar = new java.io.File(artDir, s"_knobs_$fp.txt")
-    val part = new java.io.File(artDir, s"corpus_fp=$fp")
-    val fresh = sidecar.isFile && part.isDirectory &&
-      new String(java.nio.file.Files.readAllBytes(sidecar.toPath),
-        "UTF-8") == knobs
-    val t: T =
+    StageCache.memo(s, s"trained:$artDir", s"$fp|$knobs") {
+      val sidecar = new java.io.File(artDir, s"_knobs_$fp.txt")
+      val part = new java.io.File(artDir, s"corpus_fp=$fp")
+      val fresh = sidecar.isFile && part.isDirectory &&
+        new String(java.nio.file.Files.readAllBytes(sidecar.toPath),
+          "UTF-8") == knobs
       if (fresh) load(fp)
       else {
         java.nio.file.Files.deleteIfExists(sidecar.toPath)
@@ -141,8 +136,7 @@ object MediaQueries {
         java.nio.file.Files.write(sidecar.toPath, knobs.getBytes("UTF-8"))
         t0
       }
-    trainedMemo.put(key, t)
-    t
+    }
   }
 
   private[queries] def loadCentroidArtifact(s: SparkSession, artDir: String,

@@ -3,21 +3,24 @@ package graft.queries
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped memo for cache()'d shared query stages.
+/** The session memo: every derived value a query reuses lives in ONE
+  * map of per-(session, key) slots — cache()'d shared stages (the local
+  * stand-in for a write-time table column; d2/d3 share one MinHash pass)
+  * and small values that cost a Spark job to derive (the BM25 stats row,
+  * a trained quantizer, a temp index directory). A bare process-global
+  * map would pin executor storage, retain stopped SparkSessions and
+  * serve values across sessions for the JVM lifetime; a slot instead:
   *
-  * Catalog queries materialize expensive sketch stages with `.cache()` (the
-  * local stand-in for a write-time table column) and share them across
-  * queries (d2/d3 share one MinHash pass). A bare process-global map would
-  * pin executor storage and retain stopped SparkSessions for the JVM
-  * lifetime; this registry instead:
-  *
-  *  - keys by (session, stage key) and evicts+unpersists everything for a
-  *    session via [[release]] (called by Verify / Bench / Cli when done);
-  *  - drops a session's entries automatically once its context ends, so
-  *    long-lived multi-session JVMs don't accumulate dead references.
+  *  - holds `(fingerprint, value)`: a call with another fingerprint
+  *    disposes of the old value and rebuilds;
+  *  - builds under its own lock, so one key is built once however many
+  *    threads ask, while builds of different keys nest and overlap;
+  *  - is disposed of by [[release]] (called by Verify / Bench / Cli when
+  *    done) and once its session's context ends: a `DataFrame` is
+  *    unpersisted, an `AutoCloseable` is closed.
   *
   * Storage level is conf-gated: `spark.graft.stageCache.storageLevel`
   * (default MEMORY_AND_DISK — Dataset.cache()'s level). A 126-query
@@ -29,8 +32,10 @@ import org.apache.spark.storage.StorageLevel
   */
 object StageCache {
 
-  private val stages =
-    new ConcurrentHashMap[(SparkSession, String), DataFrame]
+  /** `(fingerprint, value)` once built, else null; set under its lock. */
+  private final class Slot { @volatile var entry: (String, Any) = _ }
+
+  private val slots = new ConcurrentHashMap[(SparkSession, String), Slot]
 
   private val hooked = ConcurrentHashMap.newKeySet[SparkSession]()
 
@@ -201,8 +206,23 @@ object StageCache {
     catch { case _: IllegalArgumentException => StorageLevel.MEMORY_AND_DISK }
   }
 
+  /** The [[memo]]'d stage for `key`: the fresh persisted table if one is
+    * committed, else `build`'s plan — persisted either way, so the many
+    * consumer actions share one IO pass. */
   def getOrCache(s: SparkSession, key: String,
-      fingerprint: Option[String] = None)(build: => DataFrame): DataFrame = {
+      fingerprint: Option[String] = None)(build: => DataFrame): DataFrame =
+    memo(s, key, fingerprint.getOrElse("")) {
+      persistedTable(s, key, fingerprint).getOrElse(build).persist(levelOf(s))
+    }
+
+  /** `s`'s value for `key`, built when the slot is empty or holds another
+    * `fingerprint` (the old value is disposed of first). Only a
+    * successful build is kept. The build runs under the slot's lock, NOT
+    * inside `computeIfAbsent`: builders nest (doc_bigrams → doc_words),
+    * and a reentrant ConcurrentHashMap update throws "Recursive update"
+    * when two keys share a bin, an identity-hash-dependent crash. */
+  def memo[T](s: SparkSession, key: String, fingerprint: String)(
+      build: => T): T = {
     if (hooked.add(s)) {
       s.sparkContext.addSparkListener(new SparkListener {
         override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
@@ -210,32 +230,36 @@ object StageCache {
       })
     }
     val k = (s, key)
-    val existing = stages.get(k)
-    if (existing != null) existing
-    else {
-      // build OUTSIDE the map update: stage builders recursively call
-      // getOrCache for their dependency stages (doc_bigrams → doc_words,
-      // lang_votes → doc_words), and ConcurrentHashMap forbids reentrant
-      // modification from inside computeIfAbsent — the JDK throws
-      // IllegalStateException("Recursive update") when the two keys land
-      // in the same bin, a nondeterministic (identity-hash-dependent)
-      // crash. get-then-putIfAbsent allows the nesting; on the (benign)
-      // race a loser's cache mark is unpersisted before anything
-      // materializes it.
-      // Write-time table read-through: a persisted copy of this stage
-      // replaces the compute plan (the scan is still persisted at the
-      // session level so the many consumer actions share one IO pass).
-      val built = persistedTable(s, key, fingerprint).getOrElse(build)
-        .persist(levelOf(s))
-      val prev = stages.putIfAbsent(k, built)
-      if (prev != null) {
-        try built.unpersist() catch { case _: Throwable => () }
-        prev
-      } else built
+    val slot = slots.computeIfAbsent(k, _ => new Slot)
+    val got = slot.synchronized {
+      // a release between computeIfAbsent and this lock dropped the slot:
+      // retry on a fresh one rather than fill an orphan nobody disposes
+      if (slots.get(k) ne slot) None
+      else Some(slot.entry match {
+        case (fp, v) if fp == fingerprint => v.asInstanceOf[T]
+        case _ =>
+          empty(slot)
+          val v = build
+          slot.entry = (fingerprint, v)
+          v
+      })
     }
+    got.getOrElse(memo(s, key, fingerprint)(build))
   }
 
-  /** True iff `key` is already registered for `s` — i.e. some consumer
+  /** Dispose of `slot`'s value, if it holds one (caller holds its lock). */
+  private def empty(slot: Slot): Boolean = slot.entry != null && {
+    val v = slot.entry._2
+    slot.entry = null
+    try v match {
+      case df: Dataset[_] => df.unpersist()
+      case c: AutoCloseable => c.close()
+      case _ => ()
+    } catch { case _: Throwable => () }
+    true
+  }
+
+  /** True iff `key` already holds a value for `s` — i.e. some consumer
     * already built (and, in the action-follows-build pattern every
     * catalog query has, materialized) the cached stage. Overlapped legs
     * use this to decide whether a shared dependency needs one
@@ -245,7 +269,7 @@ object StageCache {
     * v16 read 1012 corpus rows instead of 516 without this).
     */
   def contains(s: SparkSession, key: String): Boolean =
-    stages.containsKey((s, key))
+    Option(slots.get((s, key))).exists(_.entry != null)
 
   /** Bytes (memory + disk) currently held by cached RDDs in `s`'s
     * context — the stage cache's residency plus any other caching the
@@ -256,20 +280,20 @@ object StageCache {
     try s.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
     catch { case _: Throwable => -1L }
 
-  /** Unpersist and forget every cached stage owned by `s`. Logs the
-    * released residency so a long-lived JVM's cache growth is observable
-    * instead of inferred (the r7 bench-inflation question).
+  /** Dispose of and forget every slot owned by `s` (waiting out a build
+    * in progress). Logs the released residency so a long-lived JVM's
+    * cache growth is observable instead of inferred (the r7
+    * bench-inflation question).
     */
   def release(s: SparkSession): Unit = {
     val before = storageBytes(s)
     var n = 0
-    val it = stages.entrySet().iterator()
+    val it = slots.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._1 eq s) {
-        try e.getValue.unpersist() catch { case _: Throwable => () }
         it.remove()
-        n += 1
+        if (e.getValue.synchronized(empty(e.getValue))) n += 1
       }
     }
     hooked.remove(s)
@@ -278,7 +302,7 @@ object StageCache {
       // listener runs while the context is tearing down)
       val bytes = if (before < 0) "n/a (context stopping)" else s"$before bytes"
       // scalastyle:off println
-      println(s"[StageCache] released $n stages, storage before release: $bytes")
+      println(s"[StageCache] released $n slots, storage before release: $bytes")
       // scalastyle:on println
     }
   }

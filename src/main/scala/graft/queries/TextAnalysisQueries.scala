@@ -1275,17 +1275,18 @@ object TextAnalysisQueries {
   /** The 1-row corpus-stats record (n, sum_dl, df_<term>…), read through
     * the persisted stats table when `index-sketches` wrote it — shared
     * by [[bm25ScoredAll]] and v24's fusion-gate confidence. */
-  // r16: process-memoized under the source fingerprint — every
-  // BM25-scored query path (x22/x25/x26/v14/v16/v24) re-ran the head()
-  // job per call; the row is a pure function of corpus + constants (=
-  // the fingerprint), so one driver job per corpus serves them all.
-  private val statsRowMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.Row]
+  // r16: memoized under the source fingerprint — every BM25-scored
+  // query path (x22/x25/x26/v14/v16/v24) re-ran the head() job per call;
+  // the row is a pure function of corpus + constants (= the
+  // fingerprint), so one driver job per corpus serves them all.
   private[queries] def bm25StatsRow(s: SparkSession, dir: String)
-      : org.apache.spark.sql.Row =
-    statsRowMemo.computeIfAbsent(s"$dir|${bm25Fingerprint(dir).get}",
-      _ => StageCache.readThroughOrBuild(s, s"bm25_stats:$dir",
-        bm25Fingerprint(dir))(bm25StatsDf(s, dir)).head())
+      : org.apache.spark.sql.Row = {
+    val fp = bm25Fingerprint(dir)
+    StageCache.memo(s, s"bm25_stats_row:$dir", fp.get) {
+      StageCache.readThroughOrBuild(s, s"bm25_stats:$dir", fp)(
+        bm25StatsDf(s, dir)).head()
+    }
+  }
 
   /** The BM25 query-term list, in scoring order (v24's confidence fold
     * replays it term-by-term). */

@@ -1101,35 +1101,22 @@ object VectorQueries {
       s"$base/idx", numShards = 2)
   }
 
-  /** Process-wide memo of the TEMP-dir artifacts for the no-stage-cache
-    * path, keyed by artifact name → (fingerprint, dir). One bench run
-    * times the catalog N times and serves v18/v19 (HNSW) and v20 (IVF)
-    * from the same indexes — without the memo every timed serving query
-    * paid a full stage+build (~2 s) that the read-through number then
-    * subtracted back out (ADVICE r10). A dir is replaced when its
-    * fingerprint changes and removed on JVM exit; only SUCCESSFUL
-    * builds are memoized. */
-  private val tmpArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private val tmpArtifactLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private object TmpArtifactCleanup {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tmpArtifacts.values.forEach(fd =>
-        graft.ingest.TableSwap.rmTreeAt(fd._2))))
-    /** Per-NAME build lock: independent artifacts (the v18 graph, the
-      * v20 IVF table) may build concurrently; two racers for the same
-      * name still serialize so only one temp build is memoized. */
-    def lockFor(name: String): Object =
-      tmpArtifactLocks.computeIfAbsent(name, _ => new Object)
+  /** A TEMP-dir artifact held in a [[StageCache]] slot: closing it (on a
+    * fingerprint change, [[StageCache.release]] or context end) deletes
+    * the directory. */
+  private final case class TempArtifact(dir: String) extends AutoCloseable {
+    def close(): Unit = graft.ingest.TableSwap.rmTreeAt(dir)
   }
 
   /** Acquire a serving artifact (a DIRECTORY of index state, not one
     * parquet table): write-time under the stage-cache root when
     * configured (the production shape — the read-through bench measures
-    * the walk/probe only), else the process-memoized temp build.
-    * Returns its base dir; callers must NOT delete it (the cache/memo
-    * owns cleanup). */
+    * the walk/probe only), else a session-memoized temp build. One
+    * bench run times the catalog N times and serves v18/v19 (HNSW) and
+    * v20 (IVF) from the same indexes — without the memo every timed
+    * serving query paid a full stage+build (~2 s) that the read-through
+    * number then subtracted back out (ADVICE r10). Returns its base dir;
+    * callers must NOT delete it (the cache/memo owns cleanup). */
   private def acquireArtifact(s: SparkSession, name: String, fp: String)(
       build: String => Unit): String = {
     s.conf.getOption(StageCache.PathConf)
@@ -1154,26 +1141,17 @@ object VectorQueries {
           }
         }
         d.toString
-      case None => TmpArtifactCleanup.lockFor(name).synchronized {
-        Option(tmpArtifacts.get(name)) match {
-          case Some((f, d)) if f == fp => d
-          case old =>
-            old.foreach { case (_, d) =>
-              graft.ingest.TableSwap.rmTreeAt(d)
-            }
-            tmpArtifacts.remove(name)
-            val t = java.nio.file.Files.createTempDirectory(name).toString
-            // Throwable, not Exception: an OOM out of an index build
-            // must not leak a temp copy of the embeddings table
-            try build(t)
-            catch {
-              case e: Throwable =>
-                graft.ingest.TableSwap.rmTreeAt(t); throw e
-            }
-            tmpArtifacts.put(name, (fp, t))
-            t
+      case None => StageCache.memo(s, s"tmp_artifact:$name", fp) {
+        val t = java.nio.file.Files.createTempDirectory(name).toString
+        // Throwable, not Exception: an OOM out of an index build must
+        // not leak a temp copy of the embeddings table
+        try build(t)
+        catch {
+          case e: Throwable =>
+            graft.ingest.TableSwap.rmTreeAt(t); throw e
         }
-      }
+        TempArtifact(t)
+      }.dir
     }
   }
 
@@ -1186,22 +1164,24 @@ object VectorQueries {
     * Float.toString round-trips exactly through the DOUBLE parse +
     * float CAST, so the text reproduces the stored vector bit-for-bit.
     * One copy shared by every SQL serving query (v18/v19/v20). r16:
-    * process-memoized under the source-file fingerprint (the
-    * tmpArtifacts discipline) — every serving leg needed the literal
-    * and each head() was a full driver job; the v18–v25 family pays it
-    * once per corpus now. */
-  private val qVecMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-  private val stagedCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
+    * memoized under the source-file fingerprint — every serving leg
+    * needed the literal and each head() was a full driver job; the
+    * v18–v25 family pays it once per corpus now. */
   private def queryVecLiteral(s: SparkSession, dir: String): String =
-    qVecMemo.computeIfAbsent(
-      StageCache.sourceFingerprint(Seq(s"$dir/embeddings.parquet"),
-        s"qvec:$dir"),
-      _ => Tables.embeddings(s, dir).filter(col("vec_id") === 0)
+    StageCache.memo(s, s"qvec:$dir", StageCache.sourceFingerprint(
+        Seq(s"$dir/embeddings.parquet"), "qvec")) {
+      Tables.embeddings(s, dir).filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0)
         .map(_.toString)
-        .mkString("CAST(array(", ", ", ") AS array<float>)"))
+        .mkString("CAST(array(", ", ", ") AS array<float>)")
+    }
+
+  /** Row count of a staged artifact table — the exactness-witness ef
+    * (r16: a property of the artifact's files, memoized under their
+    * stat fingerprint instead of re-running the count job per serve). */
+  private def stagedCount(staged: DataFrame, path: String): Long =
+    StageCache.memo(staged.sparkSession, s"staged_count:$path",
+      StageCache.sourceFingerprint(Seq(path), "n"))(staged.count())
 
   /** The (rank, fragment_id, <witness>) output shape shared by the SQL
     * serving queries: ranked hits plus the plan-read witness bit under
@@ -1237,12 +1217,7 @@ object VectorQueries {
       sqlText: (String, String) => String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.graft.HnswIndexRewrite
     val staged = s.read.parquet(s"$base/emb")
-    // r16: the exactness-witness ef (= staged row count) is a property
-    // of the artifact's files — memoize the count job under their stat
-    // fingerprint instead of re-running it per serve
-    val efVal = ef.getOrElse(stagedCountMemo.computeIfAbsent(
-      StageCache.sourceFingerprint(Seq(s"$base/emb"), "n"),
-      _ => java.lang.Long.valueOf(staged.count())).toInt)
+    val efVal = ef.getOrElse(stagedCount(staged, s"$base/emb").toInt)
     val qLit = queryVecLiteral(s, dir)
     val view = s"v18_emb_${java.util.UUID.randomUUID().toString.take(8)}"
     s.conf.set(HnswIndexRewrite.IndexKey, s"$base/idx")
@@ -1493,9 +1468,7 @@ object VectorQueries {
     val base = acquireArtifact(s, "v25_hnsw_routed_maint",
       v25IndexFingerprint(dir))(buildV25RoutedIndex(s, dir, _))
     val staged = s.read.parquet(s"$base/emb")
-    val efVal = stagedCountMemo.computeIfAbsent(
-      StageCache.sourceFingerprint(Seq(s"$base/emb"), "n"),
-      _ => java.lang.Long.valueOf(staged.count())).toInt
+    val efVal = stagedCount(staged, s"$base/emb").toInt
     val qLit = queryVecLiteral(s, dir)
     val view = s"v25_emb_${java.util.UUID.randomUUID().toString.take(8)}"
     s.conf.set(HnswIndexRewrite.IndexKey, s"$base/idx")

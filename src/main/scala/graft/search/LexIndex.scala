@@ -7,7 +7,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.TableSwap
-import graft.queries.StageCache
 
 /** A term-partitioned inverted postings index for the lexical (BM25)
   * channel of hybrid serving — the write-time artifact that makes

@@ -47,7 +47,7 @@ case class AnnProbeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       catch { case _: NumberFormatException => 0 }
     if (qPath.isEmpty || nprobe <= 0) return plan
     val quant =
-      try quantizer(qPath)
+      try quantizer(spark, qPath)
       catch {
         case e: Exception =>
           logWarning(s"$QuantizerKey=$qPath unreadable; ANN rewrite off", e)
@@ -185,23 +185,22 @@ object AnnProbeRewrite {
   val QuantizerKey = "spark.graft.ann.quantizer"
   val NprobeKey = "spark.graft.ann.nprobe"
 
-  /** (mtime, size)-keyed quantizer cache: the rule fires per query
-    * compilation, the sidecar parse should not. mtime alone is not a safe
-    * freshness key — filesystem mtime granularity can be a full second, so
-    * a sidecar rewritten twice within one tick would keep serving the
-    * stale parse; size breaks the tie for any content change that moves a
-    * byte count (and a same-size same-mtime rewrite is caught by the
-    * ivf_q_hash runtime guard above).
+  /** The sidecar's parsed quantizer, memoized in `spark`'s
+    * [[graft.queries.StageCache]] slot under an (mtime, size)
+    * fingerprint: the rule fires per query compilation, the sidecar
+    * parse should not. mtime alone is not a safe freshness key —
+    * filesystem mtime granularity can be a full second, so a sidecar
+    * rewritten twice within one tick would keep serving the stale parse;
+    * size breaks the tie for any content change that moves a byte count
+    * (and a same-size same-mtime rewrite is caught by the ivf_q_hash
+    * runtime guard above).
     */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    String, ((Long, Long), graft.search.Ivf.Quantizer)]()
-
-  private[graft] def quantizer(path: String): graft.search.Ivf.Quantizer = {
+  private[graft] def quantizer(spark: SparkSession,
+      path: String): graft.search.Ivf.Quantizer = {
     val p = java.nio.file.Paths.get(path)
-    val key = (java.nio.file.Files.getLastModifiedTime(p).toMillis,
-      java.nio.file.Files.size(p))
-    cache.compute(path, (_, old) =>
-      if (old != null && old._1 == key) old
-      else (key, graft.search.Ivf.load(path)))._2
+    val stamp = s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}:" +
+      java.nio.file.Files.size(p)
+    graft.queries.StageCache.memo(spark, s"ann_quantizer:$path", stamp)(
+      graft.search.Ivf.load(path))
   }
 }

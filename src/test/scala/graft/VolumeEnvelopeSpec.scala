@@ -101,7 +101,7 @@ object VolumeEnvelopeSpec {
     "x23_perplexity_buckets", "g7_temperature_mix",
     "v24_gated_fusion", "x24_perplexity_thresholds",
     "g8_temperature_alpha3", "v25_routed_maintained_serve",
-    "x25_lex_pruned_bm25", "x26_lex_scoped_bm25")
+    "x25_lex_pruned_bm25", "x26_lex_scoped_bm25", "v23_ivfpq_residual")
 
   /** name -> (bytes_shuffled, rows_scanned) pins at sf0.001 —
     * regenerate with VolumeEnvelopeGen when a plan change is intended. */
@@ -137,5 +137,8 @@ object VolumeEnvelopeSpec {
     // cold-plan fact: the postings build (explode+groupBy) dominates;
     // with the persisted lex_inverted table the read is bucket-pruned
     "x25_lex_pruned_bm25" -> ((336625L, 512L)),
-    "x26_lex_scoped_bm25" -> ((311417L, 516L)))
+    "x26_lex_scoped_bm25" -> ((311417L, 516L)),
+    // trained quantizer/codebooks load from their oracle artifacts (cold
+    // slots); the recall legs share the two cached indexes' blocks
+    "v23_ivfpq_residual" -> ((513L, 3282L)))
 }

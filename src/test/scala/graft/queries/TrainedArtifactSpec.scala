@@ -41,7 +41,7 @@ class TrainedArtifactSpec extends AnyFunSuite with BeforeAndAfterAll {
     val art = new java.io.File(MediaQueries.V6CentroidDir)
     val sidecar = new java.io.File(art, s"_knobs_$fp.txt")
     // cold: force a rebuild (no memo, no sidecar)
-    MediaQueries.trainedMemo.clear()
+    StageCache.release(spark)
     java.nio.file.Files.deleteIfExists(sidecar.toPath)
     val cold = SparkEntry.queries("v6_ivf_recall")(spark, dir)
       .collect().map(_.toSeq)
@@ -51,7 +51,7 @@ class TrainedArtifactSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stamp = maxMtime(part)
     // warm ACROSS processes (memo cleared): the query must answer from
     // the LOADED artifact without rewriting a byte of it
-    MediaQueries.trainedMemo.clear()
+    StageCache.release(spark)
     val warm = SparkEntry.queries("v6_ivf_recall")(spark, dir)
       .collect().map(_.toSeq)
     assert(maxMtime(part) == stamp,
@@ -75,13 +75,13 @@ class TrainedArtifactSpec extends AnyFunSuite with BeforeAndAfterAll {
     val art = new java.io.File(MediaQueries.V8CodebookDir)
     val sidecar = new java.io.File(art, s"_knobs_$fp.txt")
     // seed the artifact, then fake an old-knobs sidecar
-    MediaQueries.trainedMemo.clear()
+    StageCache.release(spark)
     SparkEntry.queries("v8_sq_recall")(spark, dir).collect()
     java.nio.file.Files.write(sidecar.toPath,
       "sq,levels=128,sample=1024".getBytes("UTF-8"))
     val part = new java.io.File(art, s"corpus_fp=$fp")
     val stamp = maxMtime(part)
-    MediaQueries.trainedMemo.clear()
+    StageCache.release(spark)
     Thread.sleep(1100) // mtime granularity
     SparkEntry.queries("v8_sq_recall")(spark, dir).collect()
     assert(maxMtime(part) > stamp,
@@ -92,7 +92,7 @@ class TrainedArtifactSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("codebook parquet round-trip is bit-exact (PQ layout law)") {
     val fp = MediaQueries.embCorpusFp(spark, dir)
-    MediaQueries.trainedMemo.clear()
+    StageCache.release(spark)
     SparkEntry.queries("v7_pq_recall")(spark, dir).collect()
     val trained = graft.search.Pq.train(
       MediaQueries.trainSample(spark, dir),
@@ -107,7 +107,7 @@ class TrainedArtifactSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("the residual codebook artifact (v23) round-trips bit-exact and " +
       "the warm pass loads it") {
     val fp = MediaQueries.embCorpusFp(spark, dir)
-    MediaQueries.trainedMemo.clear()
+    StageCache.release(spark)
     SparkEntry.queries("v23_ivfpq_residual")(spark, dir).collect()
     val rescb = new java.io.File(MediaQueries.V23ResCbDir,
       s"corpus_fp=$fp")
@@ -116,7 +116,7 @@ class TrainedArtifactSpec extends AnyFunSuite with BeforeAndAfterAll {
     val before = java.nio.file.Files.walk(rescb.toPath).iterator().asScala
       .map(p => p.toString -> p.toFile.lastModified()).toVector
     // warm pass: bit-identical answer, artifact bytes untouched
-    MediaQueries.trainedMemo.clear()
+    StageCache.release(spark)
     val again = SparkEntry.queries("v23_ivfpq_residual")(spark, dir)
       .collect().map(_.toString).toSeq
     val first = SparkEntry.queries("v23_ivfpq_residual")(spark, dir)
