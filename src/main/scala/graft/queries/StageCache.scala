@@ -10,7 +10,8 @@ import org.apache.spark.storage.StorageLevel
   * map of per-(session, key) slots — cache()'d shared stages (the local
   * stand-in for a write-time table column; d2/d3 share one MinHash pass)
   * and small values that cost a Spark job to derive (the BM25 stats row,
-  * a trained quantizer, a temp index directory). A bare process-global
+  * a trained quantizer, a temp index directory, an opened serving
+  * table and its file listing). A bare process-global
   * map would pin executor storage, retain stopped SparkSessions and
   * serve values across sessions for the JVM lifetime; a slot instead:
   *
@@ -20,7 +21,8 @@ import org.apache.spark.storage.StorageLevel
   *    threads ask, while builds of different keys nest and overlap;
   *  - is disposed of by [[release]] (called by Verify / Bench / Cli when
   *    done) and once its session's context ends: a `DataFrame` is
-  *    unpersisted, an `AutoCloseable` is closed.
+  *    unpersisted, an `AutoCloseable` is closed, an opened [[table]] is
+  *    forgotten.
   *
   * Storage level is conf-gated: `spark.graft.stageCache.storageLevel`
   * (default MEMORY_AND_DISK — Dataset.cache()'s level). A 126-query
@@ -214,6 +216,22 @@ object StageCache {
     memo(s, key, fingerprint.getOrElse("")) {
       persistedTable(s, key, fingerprint).getOrElse(build).persist(levelOf(s))
     }
+
+  /** A [[table]] slot's value. Not a `Dataset`, so disposing of the slot
+    * only forgets the table: `unpersist()` on a bare relation uncaches by
+    * plan and would drop another slot's cached stage over the same path. */
+  private final case class Opened(df: DataFrame)
+
+  /** The parquet table at `path`, opened at most once per session and file
+    * tree. Spark's file listing (a parallel job as wide as the directory
+    * count past 32 — 256 tasks on a term_bucket table) and its inferred
+    * schema are reused until the [[treeFingerprint]] changes; a
+    * [[graft.ingest.TableSwap]] rewrite writes new part-file names, so the
+    * next call after one opens the new table. */
+  def table(s: SparkSession, path: String): DataFrame =
+    memo(s, s"table:$path", treeFingerprint(path, "")) {
+      Opened(s.read.parquet(path))
+    }.df
 
   /** `s`'s value for `key`, built when the slot is empty or holds another
     * `fingerprint` (the old value is disposed of first). Only a

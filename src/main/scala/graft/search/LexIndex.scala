@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.TableSwap
+import graft.queries.StageCache
 
 /** A term-partitioned inverted postings index for the lexical (BM25)
   * channel of hybrid serving — the write-time artifact that makes
@@ -43,6 +44,17 @@ import graft.ingest.TableSwap
   *    sidecar — a reingest that skipped the lex step must be loud, not
   *    a silent mis-rank (the ivf_q_hash contract). The check is a
   *    file-tree walk, never a data read.
+  *
+  * What a serve reads: the stats sidecar and its fragments fingerprint
+  * (file reads and a tree walk); the lexicon cells of the query terms'
+  * buckets plus each unfolded `lex_dict.delta` batch (the df map); the
+  * postings cells of the same buckets plus each delta batch (the score,
+  * twice on the MaxScore route); `fragments` only under a view/lang
+  * scope. Every one of these tables is opened through
+  * [[graft.queries.StageCache.table]], once per session and file tree, so
+  * a warm serve runs only its pruned scans — no file listing (a job of
+  * up to 256 tasks per open of a term_bucket table) and no schema
+  * inference.
   *
   * The pruned path is bit-for-bit the scan path: integer tf/df/dl/n
   * facts are identical by construction, and the per-document score sums
@@ -356,15 +368,15 @@ object LexIndex {
     val restricted: Option[DataFrame] =
       forwardUnfolded(tablesDir).map { unfolded =>
         val buckets = docIds.map(bucketOf).distinct
-        var cur = spark.read.parquet(forwardPath(tablesDir))
+        var cur = StageCache.table(spark, forwardPath(tablesDir))
           .filter(col("doc_bucket").isin(buckets: _*))
           .filter(col("doc_id").isin(docIds: _*))
           .select(col("doc_id"), col("id"), col("term"))
         unfolded.foreach { case (k, fwdDir) =>
-          val dels = spark.read
-            .parquet(batchDirs(tablesDir).toMap.apply(k))
+          val dels = StageCache
+            .table(spark, batchDirs(tablesDir).toMap.apply(k))
             .filter(col("op") === "del").select(col("doc_id"))
-          val insB = spark.read.parquet(fwdDir)
+          val insB = StageCache.table(spark, fwdDir)
             .filter(col("doc_bucket").isin(buckets: _*))
             .filter(col("doc_id").isin(docIds: _*))
             .select(col("doc_id"), col("id"), col("term"))
@@ -424,10 +436,10 @@ object LexIndex {
         .filter(col("term").isin(qTerms: _*))
     val cols = Seq("term", "id", "doc_id", "dl", "tf", "term_bucket")
       .map(col)
-    var cur = prune(spark.read.parquet(indexPath(tablesDir)))
+    var cur = prune(StageCache.table(spark, indexPath(tablesDir)))
       .select(cols: _*)
     batchDirs(tablesDir).foreach { case (_, dir) =>
-      val b = spark.read.parquet(dir)
+      val b = StageCache.table(spark, dir)
       val dels = b.filter(col("op") === "del").select(col("doc_id"))
       val ins = prune(b.filter(col("op") === "ins")).select(cols: _*)
       cur = cur.join(broadcast(dels), Seq("doc_id"), "left_anti")
@@ -520,10 +532,10 @@ object LexIndex {
         def pruneTerms(df: DataFrame): DataFrame = df
           .filter(col("term_bucket").isin(buckets: _*))
           .filter(col("term").isin(qTerms: _*))
-        val base = pruneTerms(spark.read.parquet(dictPath(tablesDir)))
+        val base = pruneTerms(StageCache.table(spark, dictPath(tablesDir)))
           .select(col("term"), col("df"))
         val adj = unfolded.map { case (_, dir) =>
-          pruneTerms(spark.read.parquet(dir))
+          pruneTerms(StageCache.table(spark, dir))
             .select(col("term"), col("ddf").as("df"))
         }
         val all = adj.foldLeft(base)(_ unionByName _)
@@ -577,7 +589,7 @@ object LexIndex {
       view: Option[String] = None, lang: Option[String] = None)
       : (Long, Map[String, Long], Seq[String], Seq[(String, Double)]) = {
     val qTerms = queryTerms(query)
-    lazy val frags = spark.read.parquet(s"$tablesDir/fragments")
+    lazy val frags = StageCache.table(spark, s"$tablesDir/fragments")
     val eligible =
       if (view.isEmpty && lang.isEmpty) None
       else Some(Seq(view.map(col("view") === _),

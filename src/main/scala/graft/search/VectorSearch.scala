@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.queries.StageCache
+
 /** The retrieval pipeline (reference §3.1) re-expressed as declarative
   * DataFrame plans:
   *
@@ -107,16 +109,22 @@ object VectorSearch {
       route: DenseRoute): Seq[(String, Double)] = {
     def embed(dim: Int) =
       new graft.embedding.OfflineEmbedder(dim).embedQuery(query)
-    def dimOf(df: DataFrame, name: String, rebuild: String): Int = {
-      val first = df.select(col("vector")).head(1)
-      require(first.nonEmpty,
-        s"$name under $tablesDir is empty; re-run $rebuild")
-      first(0).getAs[scala.collection.Seq[Float]](0).length
+    // kept beside the opened table, under the same fingerprint: one
+    // head(1) job per file tree, not per serve
+    def dimOf(name: String, rebuild: String): Int = {
+      val path = s"$tablesDir/$name"
+      StageCache.memo(spark, s"dim:$path",
+          StageCache.treeFingerprint(path, "")) {
+        val first = StageCache.table(spark, path).select(col("vector")).head(1)
+        require(first.nonEmpty,
+          s"$name under $tablesDir is empty; re-run $rebuild")
+        first(0).getAs[scala.collection.Seq[Float]](0).length
+      }
     }
     def scoped(index: DataFrame): (DataFrame, Option[Column]) =
       if (view.isEmpty && lang.isEmpty) (index, None)
       else {
-        val meta = spark.read.parquet(s"$tablesDir/embeddings")
+        val meta = StageCache.table(spark, s"$tablesDir/embeddings")
           .select(col("fragment_id").as("__fid"),
             col("view").as("__view"), col("lang").as("__lang"))
         (index.join(meta, col("fragment_id") === col("__fid"), "left"),
@@ -127,19 +135,19 @@ object VectorSearch {
       case RoutedGraph(r) =>
         val path = s"$tablesDir/embeddings_hnsw_routed"
         val router = Ivf.load(s"$path.router.txt")
-        val (searchable, pred) = scoped(spark.read.parquet(path))
+        val (searchable, pred) = scoped(StageCache.table(spark, path))
         Hnsw.searchIndexRouted(searchable, Seq(("q", embed(router.dim))),
           c, ef, router, probeShards = r, predicate = pred)
           .orderBy(col("rank"))
       case FlatGraph =>
-        val index = spark.read.parquet(s"$tablesDir/embeddings_hnsw")
-        val qvec = embed(dimOf(index, "embeddings_hnsw", "hnsw-index"))
-        val (searchable, pred) = scoped(index)
+        val qvec = embed(dimOf("embeddings_hnsw", "hnsw-index"))
+        val (searchable, pred) =
+          scoped(StageCache.table(spark, s"$tablesDir/embeddings_hnsw"))
         Hnsw.searchIndex(searchable, Seq(("q", qvec)), c, ef,
           predicate = pred).orderBy(col("rank"))
       case ExactScan =>
-        val emb = spark.read.parquet(s"$tablesDir/embeddings")
-        knn(emb, embed(dimOf(emb, "embeddings", "ingest")), c, view, lang)
+        knn(StageCache.table(spark, s"$tablesDir/embeddings"),
+          embed(dimOf("embeddings", "ingest")), c, view, lang)
     }
     hits.select(col("fragment_id"), col("similarity")).collect()
       .map(r => (r.getString(0), r.getDouble(1))).toSeq

@@ -614,4 +614,46 @@ class LexIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(boundedSeen >= 1,
       "the fuzz never engaged the MaxScore route — corpus shape drifted")
   }
+
+  test("a warm serve re-lists no table; after a reingest the next serve " +
+      "reads the rewritten fragment") {
+    val engine = new Engine(spark, new OfflineEmbedder(64))
+    val td = s"$dir/tables_warm"
+    // enough distinct words that the postings and the lexicon span more
+    // than 32 term_bucket cells: opening either cold is a listing job
+    val files = (0 until 120).map(i => s"w${i}x").grouped(40).zipWithIndex
+      .map { case (ws, i) =>
+        writeDoc(s"warm$i.txt", s"document $i speaks of ${ws.mkString(" ")}")
+      }.toList
+    ingestTables(td, files, engine)
+    calibrate(td)
+    LexIndex.build(spark, td)
+    val query = "w3x w45x w90x"
+    val (cold, coldJobs) = JobLog.during(spark) {
+      Cli.hybridSearchCommand(spark, td, query, 5)
+    }
+    assert(coldJobs.exists(_.isListing),
+      s"the cold serve must list the postings: $coldJobs")
+    val (warm, warmJobs) = JobLog.during(spark) {
+      Cli.hybridSearchCommand(spark, td, query, 5)
+    }
+    assert(warm == cold)
+    assert(!warmJobs.exists(_.isListing),
+      s"a warm serve must reuse every opened table: $warmJobs")
+
+    Files.write(Paths.get(files.head),
+      "document zero rewritten about quokka marsupials basking"
+        .getBytes(StandardCharsets.UTF_8))
+    Cli.reingestCommand(spark, engine, td, List(files.head))
+    import org.apache.spark.sql.functions.col
+    val rewritten = spark.read.parquet(s"$td/fragments")
+      .filter(col("content").contains("quokka"))
+      .select("id").collect().map(_.getString(0)).toSeq
+    assert(rewritten.size == 1)
+    val after =
+      Cli.hybridSearchCommand(spark, td, "quokka marsupials basking", 5)
+    assert(after.hits.headOption.map(_._1) == rewritten.headOption,
+      s"the serve after a reingest must rank the rewritten fragment " +
+        s"first: ${after.hits}")
+  }
 }
