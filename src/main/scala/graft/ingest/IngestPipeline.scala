@@ -131,8 +131,10 @@ object IngestPipeline {
     * partitions (first byte of the md5 document id — uniform by
     * construction) rather than one partition per document: at 100 TB,
     * per-document partitioning would mean millions of tiny files, while 256
-    * buckets keep files large and let re-ingest replace exactly the
-    * touched documents via an anti-join merge within affected buckets.
+    * buckets keep files large. The buckets prune lookups by document id;
+    * re-ingest does not use them: `Cli.reingestBatch` reads every bucket
+    * of the table, anti-joins out the replaced documents and writes every
+    * bucket again through a [[TableSwap]].
     */
   def writeTable(df: DataFrame, path: String,
       key: String = "document_id"): Unit =

@@ -147,9 +147,8 @@ object IndexMaintenance {
 
       val staging = stagingOf(indexPath)
       TableSwap.rmTreeAt(staging)
-      rebuilt.repartition(col("list_id"))
-        .sortWithinPartitions(sortCol)
-        .write.partitionBy("list_id").parquet(staging)
+      graft.sources.TableLayout.writePartitionedSorted(
+        rebuilt, staging, "list_id", Seq(sortCol))
       // explicit schema: a pure deletion can stage ZERO rows (every
       // affected list emptied), and a schema-less read of a file-less
       // staging dir fails with UNABLE_TO_INFER_SCHEMA

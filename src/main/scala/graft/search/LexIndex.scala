@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ingest.TableSwap
 import graft.queries.StageCache
+import graft.sources.TableLayout
 
 /** A term-partitioned inverted postings index for the lexical (BM25)
   * channel of hybrid serving — the write-time artifact that makes
@@ -227,10 +228,8 @@ object LexIndex {
   private def writeDict(spark: SparkSession, tablesDir: String,
       postings: DataFrame, epoch: Seq[Int]): Unit = {
     swapIn(dictPath(tablesDir)) { staging =>
-      dictOf(postings)
-        .repartition(col("term_bucket"))
-        .sortWithinPartitions("term")
-        .write.partitionBy("term_bucket").parquet(staging)
+      TableLayout.writePartitionedSorted(dictOf(postings), staging,
+        "term_bucket", Seq("term"))
       writeEpoch(staging, epoch)
     }
   }
@@ -238,31 +237,33 @@ object LexIndex {
   private def writeForward(spark: SparkSession, tablesDir: String,
       postings: DataFrame, epoch: Seq[Int]): Unit = {
     swapIn(forwardPath(tablesDir)) { staging =>
-      forwardOf(postings)
-        .repartition(col("doc_bucket"))
-        .sortWithinPartitions("doc_id", "id", "term")
-        .write.partitionBy("doc_bucket").parquet(staging)
+      TableLayout.writePartitionedSorted(forwardOf(postings), staging,
+        "doc_bucket", Seq("doc_id", "id", "term"))
       writeEpoch(staging, epoch)
     }
   }
+
+  private def writePostings(postings: DataFrame, staging: String): Unit =
+    TableLayout.writePartitionedSorted(postings, staging, "term_bucket",
+      Seq("term", "id"))
 
   /** Full build from the live fragments table: stage-then-swap the base
     * postings (partitioned by term_bucket, term-sorted within each
     * partition for row-group pruning), the lexicon and the forward
     * sidecar (epoch ∅), drop any deltas (they described the OLD base),
     * stats sidecar LAST so a crash anywhere before it leaves a
-    * loudly-stale index, never a silently-wrong one. */
+    * loudly-stale index, never a silently-wrong one. The lexicon and
+    * the forward sidecar derive from the postings held persisted here:
+    * reopening the base just written would cost a listing job, a schema
+    * inference and a scan. */
   def build(spark: SparkSession, tablesDir: String): Stats = {
     val frags = spark.read.parquet(s"$tablesDir/fragments")
-    swapIn(indexPath(tablesDir)) { staging =>
-      postingsOf(frags)
-        .repartition(col("term_bucket"))
-        .sortWithinPartitions("term", "id")
-        .write.partitionBy("term_bucket").parquet(staging)
-    }
-    val base = spark.read.parquet(indexPath(tablesDir))
-    writeForward(spark, tablesDir, base, Nil)
-    writeDict(spark, tablesDir, base, Nil)
+    val postings = postingsOf(frags).persist()
+    try {
+      swapIn(indexPath(tablesDir))(writePostings(postings, _))
+      writeForward(spark, tablesDir, postings, Nil)
+      writeDict(spark, tablesDir, postings, Nil)
+    } finally { postings.unpersist(); () }
     TableSwap.rmTreeAt(deltaPath(tablesDir))
     TableSwap.rmTreeAt(dictDeltaPath(tablesDir))
     TableSwap.rmTreeAt(forwardDeltaPath(tablesDir))
@@ -464,12 +465,7 @@ object LexIndex {
     val ks = batches.map(_._1)
     writeForward(spark, tablesDir, merged, ks)
     writeDict(spark, tablesDir, merged, ks)
-    swapIn(indexPath(tablesDir)) { staging =>
-      merged
-        .repartition(col("term_bucket"))
-        .sortWithinPartitions("term", "id")
-        .write.partitionBy("term_bucket").parquet(staging)
-    }
+    swapIn(indexPath(tablesDir))(writePostings(merged, _))
     batches.foreach { case (_, dir) => TableSwap.rmTreeAt(dir) }
     TableSwap.rmTreeAt(deltaPath(tablesDir))
     TableSwap.rmTreeAt(dictDeltaPath(tablesDir))

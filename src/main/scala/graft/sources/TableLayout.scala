@@ -33,12 +33,21 @@ object TableLayout {
       .saveAsTable(tableName)
 
   /** Layout for filter locality: partition by a low-cardinality column,
-    * sort within partitions on the hot filter keys.
+    * sort within partitions on the hot filter keys. Every partition cell
+    * is exactly one file, and the cells are written by as many tasks as
+    * the session has shuffle partitions: the shuffle names its partition
+    * count, so AQE does not coalesce it (a `repartition(col)` of a small
+    * table collapses into one task that writes every cell in turn). The
+    * sort leads with the partition column: the writer needs its input
+    * grouped by cell and otherwise sorts on that column alone, and the
+    * optimizer then drops the sort on the filter keys.
     */
   def writePartitionedSorted(df: DataFrame, path: String,
       partitionCol: String, sortCols: Seq[String]): Unit =
-    df.repartition(df.col(partitionCol))
-      .sortWithinPartitions(sortCols.map(df.col): _*)
+    df.repartition(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        df.col(partitionCol))
+      .sortWithinPartitions((partitionCol +: sortCols).map(df.col): _*)
       .write.mode(SaveMode.Overwrite)
       .partitionBy(partitionCol)
       .parquet(path)
