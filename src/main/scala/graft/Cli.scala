@@ -305,7 +305,7 @@ object Cli {
         // prints text, not bare ids) — a pushed-filter point read
         val snippets: Map[String, String] =
           if (r.hits.isEmpty) Map.empty
-          else spark.read.parquet(s"$tablesDir/fragments")
+          else graft.queries.StageCache.table(spark, s"$tablesDir/fragments")
             .filter(col("id").isin(r.hits.map(_._1): _*))
             .select(col("id"), col("content"))
             .collect()
@@ -511,16 +511,8 @@ object Cli {
     // [[graft.ingest.TableSwap]] (spec-pinned on every crash state)
     def mergeWrite(name: String, incoming: org.apache.spark.sql.DataFrame,
         key: String = "document_id"): Unit = step(name) {
-      val path = s"$tablesDir/$name"
-      graft.ingest.TableSwap.recoverSwap(path)
-        .foreach(a => System.err.println(s"[reingest] $path: $a"))
-      // doc_bucket is a derived partition column — recomputed on write
-      val existing = spark.read.parquet(path).drop("doc_bucket")
-      val merged = graft.ingest.IngestPipeline
-        .replaceDocuments(existing, incoming, key)
-      // stage then swap — can't overwrite a dir that's being read
-      graft.ingest.TableSwap.swap(path)(staging =>
-        graft.ingest.IngestPipeline.writeTable(merged, staging, key))
+      graft.ingest.IngestPipeline.replaceDocumentsAt(s"$tablesDir/$name",
+        incoming, key)
     }
     mergeWrite("documents", r.documents.toDF(), key = "id")
     mergeWrite("concepts", r.concepts.toDF())
@@ -556,26 +548,18 @@ object Cli {
             }
         }
       }
-      // the HNSW index has its own maintenance path (document cascade
-      // over the graph shards) — a stale graph would silently serve the
-      // replaced documents' old fragments
-      val hnswPath = s"$tablesDir/embeddings_hnsw"
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(hnswPath))) {
-        val st = graft.search.HnswMaintenance.updateIndexByDoc(
-          spark, hnswPath, r.embeddings.toDF())
-        println(s"[reingest] embeddings_hnsw: ${st.extendedShards.size} " +
-          s"shards extended, ${st.rebuiltShards.size} rebuilt")
-      }
-      // the ROUTED graph index maintains through the frozen router
-      // sidecar — a replaced document's fragments leave whichever cells
-      // they lived in, the re-embedded ones route to theirs
-      val routedPath = s"$tablesDir/embeddings_hnsw_routed"
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(routedPath))) {
-        val st = graft.search.HnswMaintenance.updateIndexByDocRouted(
-          spark, routedPath, r.embeddings.toDF())
-        println(s"[reingest] embeddings_hnsw_routed: " +
-          s"${st.extendedShards.size} shards extended, " +
-          s"${st.rebuiltShards.size} rebuilt")
+      // the graph indexes have their own maintenance path (document
+      // cascade over the graph shards; a routed index routes the delta
+      // through its frozen router sidecar) — a stale graph would
+      // silently serve the replaced documents' old fragments
+      Seq("embeddings_hnsw", "embeddings_hnsw_routed").foreach { name =>
+        val path = s"$tablesDir/$name"
+        if (java.nio.file.Files.exists(java.nio.file.Paths.get(path))) {
+          val st = graft.search.HnswMaintenance.updateIndexByDoc(
+            spark, path, r.embeddings.toDF())
+          println(s"[reingest] $name: ${st.extendedShards.size} " +
+            s"shards extended, ${st.rebuiltShards.size} rebuilt")
+        }
       }
     }
     // the lexical postings index maintains by delta batch (Lucene-
@@ -605,7 +589,8 @@ object Cli {
       val floorPath = s"$tablesDir/fusion_floor.txt"
       if (graft.search.FusionFloor.exists(floorPath)) {
         val a = graft.search.FusionFloor.calibrate(
-          spark.read.parquet(s"$tablesDir/fragments"), "id", "content",
+          graft.queries.StageCache.table(spark, s"$tablesDir/fragments"),
+          "id", "content",
           tableDir = Some(s"$tablesDir/fragments"))
         graft.search.FusionFloor.save(a, floorPath)
         println(s"[reingest] fusion_floor: recalibrated " +
@@ -613,8 +598,10 @@ object Cli {
       }
     }
     ReingestJournal.clear(tablesDir)
+    val nFrags =
+      graft.queries.StageCache.table(spark, s"$tablesDir/fragments").count()
     println(s"[reingest] replaced ${files.length} documents; " +
-      s"fragments now ${spark.read.parquet(s"$tablesDir/fragments").count()}")
+      s"fragments now $nFrags")
     r.release()
   }
 

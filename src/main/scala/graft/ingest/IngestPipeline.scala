@@ -153,4 +153,19 @@ object IngestPipeline {
     existing.join(broadcast(ids), Seq(key), "left_anti")
       .unionByName(incoming)
   }
+
+  /** [[replaceDocuments]] applied to the table at `path`, crash-safely:
+    * heal a torn earlier swap, read the live table (minus its derived
+    * `doc_bucket` column — [[writeTable]] recomputes it), then stage the
+    * merged table and swap it in ([[TableSwap]] — a directory being
+    * read cannot be overwritten in place).
+    */
+  def replaceDocumentsAt(path: String, incoming: DataFrame,
+      key: String = "document_id"): Unit = {
+    TableSwap.recoverSwap(path)
+      .foreach(a => System.err.println(s"[replace] $path: $a"))
+    val existing = incoming.sparkSession.read.parquet(path).drop("doc_bucket")
+    val merged = replaceDocuments(existing, incoming, key)
+    TableSwap.swap(path)(staging => writeTable(merged, staging, key))
+  }
 }

@@ -11,9 +11,10 @@ import java.nio.file.{Files, Path, Paths}
   * cases this protocol has accreted (the live+staging window below).
   *
   * Contract: the caller stages EVERY affected partition under
-  * `<path>.update-staging/<col>=<id>`, then writes the manifest (the
-  * affected id list) — only after the staged write is complete — then
-  * [[swapAll]] moves each staged dir into place via [[TableSwap.swap]].
+  * `<path>.update-staging/<col>=<id>`, then [[commit]]s: the manifest
+  * (the affected id list) is written only after the staged write is
+  * complete, then [[swapAll]] moves each staged dir into place via
+  * [[TableSwap.swap]].
   * A crash anywhere rolls FORWARD on the next [[recover]]: with a
   * manifest present the staged data is known complete, so every listed
   * partition is brought to its new contents whether the crash hit
@@ -23,32 +24,33 @@ import java.nio.file.{Files, Path, Paths}
 object PartitionedSwap {
 
   def stagingOf(path: String): String = s"$path.update-staging"
-  def manifestOf(path: String): String = s"$path.update-manifest"
+  private def manifestOf(path: String): String = s"$path.update-manifest"
 
-  def writeManifest(path: String, parts: Seq[Int]): Unit =
-    Files.write(Paths.get(manifestOf(path)),
-      parts.mkString("\n").getBytes(StandardCharsets.UTF_8))
-
-  def clearAfterSuccess(path: String): Unit = {
-    Files.deleteIfExists(Paths.get(manifestOf(path)))
-    TableSwap.rmTreeAt(stagingOf(path))
-  }
-
-  /** Materialize every affected staged partition dir — a pure deletion
-    * can stage ZERO rows for a partition, which must still swap in as an
-    * empty partition rather than be skipped.
+  /** Apply an update whose affected partitions `parts` are all staged:
+    * materialize every affected staged dir (a pure deletion can stage
+    * ZERO rows for a partition, which must still swap in as an empty
+    * partition rather than be skipped), THEN declare the update via the
+    * manifest — from here [[recover]] rolls the whole partition set
+    * forward, never backward — swap each partition in, and delete the
+    * manifest and staging only after every partition swapped.
     */
-  def ensureStagedDirs(path: String, partCol: String, parts: Seq[Int]): Unit =
+  def commit(path: String, partCol: String, parts: Seq[Int]): Unit = {
     parts.foreach { p =>
       val d = Paths.get(stagingOf(path), s"$partCol=$p")
       if (!Files.exists(d)) Files.createDirectories(d)
     }
+    Files.write(Paths.get(manifestOf(path)),
+      parts.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    swapAll(path, partCol, parts)
+    Files.deleteIfExists(Paths.get(manifestOf(path)))
+    TableSwap.rmTreeAt(stagingOf(path))
+  }
 
   /** Swap every listed partition whose staged directory is still present
     * (one already consumed means that partition's swap completed earlier
     * — the crash-resume path skips it).
     */
-  def swapAll(path: String, partCol: String, parts: Seq[Int]): Unit = {
+  private def swapAll(path: String, partCol: String, parts: Seq[Int]): Unit = {
     val staging = stagingOf(path)
     parts.foreach { p =>
       val stagedDir = Paths.get(staging, s"$partCol=$p")

@@ -1406,9 +1406,10 @@ object VectorQueries {
   // v25 — the ROUTED maintained serving loop end-to-end (VERDICT r14
   // task 2): the cluster-routed layout (frozen k-means router, ×3
   // replication, size-bounded sub-shards) built over the PRE-delta
-  // corpus, one [[graft.search.HnswMaintenance.updateIndexRouted]]
-  // delta exercising all three mutation kinds (INSERT %10==3, REPLACE
-  // %10==7 with its reversed vector — which ROUTES TO DIFFERENT CELLS,
+  // corpus, one [[graft.search.HnswMaintenance.updateIndex]] delta
+  // (the router sidecar selects the routed placement) exercising all
+  // three mutation kinds (INSERT %10==3, REPLACE %10==7 with its
+  // reversed vector — which ROUTES TO DIFFERENT CELLS,
   // the move case hash sharding never has, DELETE %10==5), then the
   // v19 verbatim distance-ASC SQL served through [[HnswIndexRewrite]],
   // which recognizes the router sidecar and prunes the walk to the
@@ -1451,8 +1452,8 @@ object VectorQueries {
         .select(col("fragment_id"), reverse(col("vector")).as("vector")))
     val dropIds = all.filter(col("vec_id") % 10 === 5)
       .select(col("fragment_id")).as[String].collect().toSeq
-    val stats = HnswMaintenance.updateIndexRouted(s, s"$base/idx",
-      incoming, dropIds)
+    val stats = HnswMaintenance.updateIndex(s, s"$base/idx", incoming,
+      dropIds)
     require(stats.rebuiltShards.nonEmpty && stats.incomingRows > 0,
       s"v25 delta must exercise the rebuild path: $stats")
     all.filter(col("vec_id") % 10 =!= 5)

@@ -485,34 +485,53 @@ object Hnsw {
       .as[(String, Array[Float], String)]
       .repartition(numShards, col(idCol))
       .mapPartitions { it =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val shard = org.apache.spark.TaskContext.getPartitionId()
-          val docs = rows.map(_._3)
-          // hash the RAW input vector (node index = insertion order,
-          // the same parallel-array contract doc_id rides on)
-          val hashes = rows.map(r => normHash(r._2))
-          build(rows.map(r => (r._1, r._2)).toSeq, m, efConstruction)
-            .exportRows.iterator
-            .map { case (i, id, v, ls) =>
-              (shard, i, id, v, ls, docs(i), hashes(i))
-            }
-        }
+        buildShard(org.apache.spark.TaskContext.getPartitionId(), it.toArray,
+          m, efConstruction)
       }
       .toDF("shard_id", "node_idx", idCol, vectorCol, "links", "doc_id",
         "vec_hash")
   }
 
+  /** One shard's graph, the build kernel of both layouts: `(id, raw
+    * vector, doc_id)` rows sorted by id and inserted in that order, then
+    * exported one row per node with its doc_id and the hash of its RAW
+    * input vector (node index = insertion order, so position i's doc and
+    * hash follow node i).
+    */
+  private def buildShard(shard: Int, in: Array[(String, Array[Float], String)],
+      m: Int, efConstruction: Int)
+      : Iterator[(Int, Int, String, Array[Float], Array[Array[Int]], String,
+        Long)] = {
+    val rows = in.sortBy(_._1)
+    if (rows.isEmpty) Iterator.empty
+    else {
+      val docs = rows.map(_._3)
+      val hashes = rows.map(r => normHash(r._2))
+      build(rows.map(r => (r._1, r._2)).toSeq, m, efConstruction)
+        .exportRows.iterator
+        .map { case (i, id, v, ls) =>
+          (shard, i, id, v, ls, docs(i), hashes(i))
+        }
+    }
+  }
+
   /** Persist the adjacency table partitioned by shard, so one search
-    * task reads exactly one shard's rows.
+    * task reads exactly one shard's rows. A router sidecar left at
+    * `<path>.router.txt` by an earlier routed index at the same path is
+    * deleted FIRST: it declares the routed layout to every reader
+    * ([[org.apache.spark.sql.graft.HnswIndexRewrite]],
+    * [[HnswMaintenance]]), and a routed walk of this flat graph would
+    * prune to cell 0's shard range and silently miss every other cell.
     */
   def saveIndex(embeddings: DataFrame, path: String, numShards: Int,
       m: Int = 16, efConstruction: Int = 200, vectorCol: String = "vector",
-      idCol: String = "fragment_id", docCol: Option[String] = None): Unit =
+      idCol: String = "fragment_id", docCol: Option[String] = None): Unit = {
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$path.router.txt"))
     buildIndexTable(embeddings, numShards, m, efConstruction, vectorCol,
       idCol, docCol)
       .write.mode("overwrite").partitionBy("shard_id").parquet(path)
+  }
 
   /** CLUSTER-ROUTED layout (VERDICT r13 task 3 — closes the 10M soak's
     * wave-bound fan-out finding). Hash sharding makes every shard a
@@ -600,17 +619,8 @@ object Hnsw {
       }
       .groupByKey(_._4)
       .flatMapGroups { (shard, it) =>
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val docs = rows.map(_._3)
-          val hashes = rows.map(r => normHash(r._2))
-          build(rows.map(r => (r._1, r._2)).toSeq, m, efConstruction)
-            .exportRows.iterator
-            .map { case (i, id, v, ls) =>
-              (shard, i, id, v, ls, docs(i), hashes(i))
-            }
-        }
+        buildShard(shard, it.map(r => (r._1, r._2, r._3)).toArray, m,
+          efConstruction)
       }
       .toDF("shard_id", "node_idx", idCol, vectorCol, "links", "doc_id",
         "vec_hash")

@@ -155,14 +155,9 @@ object IndexMaintenance {
       val nRewritten =
         spark.read.schema(rebuilt.schema).parquet(staging).count()
 
-      // materialize every staged partition dir (a list can end up empty —
-      // its only doc replaced away — and swaps in as an empty partition),
-      // THEN declare the update via the manifest: from here recovery
-      // rolls the whole list set forward, never backward
-      graft.ingest.PartitionedSwap.ensureStagedDirs(indexPath, PartCol, affected)
-      graft.ingest.PartitionedSwap.writeManifest(indexPath, affected)
-      graft.ingest.PartitionedSwap.swapAll(indexPath, PartCol, affected)
-      graft.ingest.PartitionedSwap.clearAfterSuccess(indexPath)
+      // a list can end up empty (its only doc replaced away) and swaps
+      // in as an empty partition
+      graft.ingest.PartitionedSwap.commit(indexPath, PartCol, affected)
       UpdateStats(affected, nRewritten, encoded.count())
     } finally { encoded.unpersist(); () }
   }

@@ -349,7 +349,7 @@ object LexIndex {
       .sortWithinPartitions("term", "id")
       .write.mode("errorifexists")
       .parquet(s"${deltaPath(tablesDir)}/batch=$k")
-    val (n, sumDl) = statsOf(spark.read.parquet(s"$tablesDir/fragments"))
+    val (n, sumDl) = statsOf(StageCache.table(spark, s"$tablesDir/fragments"))
     saveStats(tablesDir, n, sumDl)
     k
   }

@@ -904,11 +904,13 @@ object EventStreams {
 
   /** [[ingestIndexStream]]'s HNSW twin: every micro-batch re-ingests its
     * documents and applies a document-cascade update to the persisted
-    * graph index ([[graft.search.HnswMaintenance.updateIndexByDoc]] —
-    * insert-only shards extend their graph in place, replacement shards
-    * rebuild, manifest-recoverable swaps). Same at-least-once +
-    * idempotent-replace convergence argument as the IVF stream; the
-    * graph's `ef = n` exactness witness keeps holding after every batch.
+    * graph index, hash-sharded or cluster-routed
+    * ([[graft.search.HnswMaintenance.updateIndexByDoc]] — insert-only
+    * shards extend their graph in place, replacement shards rebuild, a
+    * routed index routes the delta through its frozen router sidecar,
+    * manifest-recoverable swaps). Same at-least-once + idempotent-replace
+    * convergence argument as the IVF stream; the graph's `ef = n`
+    * exactness witness keeps holding after every batch.
     */
   def ingestHnswIndexStream(
       texts: Dataset[graft.ingest.IngestPipeline.DocInput],
@@ -933,42 +935,6 @@ object EventStreams {
       graft.ingest.IngestPipeline.fragments(
         graft.ingest.IngestPipeline.process(batch)), embedder).toDF()
     graft.search.HnswMaintenance.updateIndexByDoc(spark, indexPath, emb)
-    ()
-  }
-
-  /** [[ingestHnswIndexStream]]'s ROUTED twin (VERDICT r14 task 2c):
-    * micro-batches drive
-    * [[graft.search.HnswMaintenance.updateIndexByDocRouted]] — delta
-    * vectors route through the frozen router sidecar, hot cells
-    * re-split their sub-shards, and the same at-least-once +
-    * idempotent-replace convergence argument carries over (the routed
-    * update is replace-by-document idempotent and heals torn swaps via
-    * recover(), exactly like the hash twin).
-    */
-  def ingestRoutedHnswIndexStream(
-      texts: Dataset[graft.ingest.IngestPipeline.DocInput],
-      indexPath: String, embedder: graft.embedding.Embedder,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    texts.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch {
-        (batch: Dataset[graft.ingest.IngestPipeline.DocInput], _: Long) =>
-          applyRoutedHnswIngestBatch(indexPath, embedder, batch)
-      }
-      .start()
-
-  /** One micro-batch of [[ingestRoutedHnswIndexStream]] — exposed for
-    * deterministic replay in specs.
-    */
-  private[graft] def applyRoutedHnswIngestBatch(indexPath: String,
-      embedder: graft.embedding.Embedder,
-      batch: Dataset[graft.ingest.IngestPipeline.DocInput]): Unit = {
-    val spark = batch.sparkSession
-    val emb = graft.ingest.IngestPipeline.embeddings(
-      graft.ingest.IngestPipeline.fragments(
-        graft.ingest.IngestPipeline.process(batch)), embedder).toDF()
-    graft.search.HnswMaintenance.updateIndexByDocRouted(spark, indexPath,
-      emb)
     ()
   }
 
@@ -1010,14 +976,8 @@ object EventStreams {
     val ids = processed.map(_.document.id).collect().toSeq.distinct
     if (ids.isEmpty) return
     val frags = graft.ingest.IngestPipeline.fragments(processed).toDF()
-    val path = s"$tablesDir/fragments"
-    graft.ingest.TableSwap.recoverSwap(path)
-      .foreach(a => System.err.println(s"[lex-stream] $path: $a"))
-    val existing = spark.read.parquet(path).drop("doc_bucket")
-    val merged =
-      graft.ingest.IngestPipeline.replaceDocuments(existing, frags)
-    graft.ingest.TableSwap.swap(path)(staging =>
-      graft.ingest.IngestPipeline.writeTable(merged, staging))
+    graft.ingest.IngestPipeline.replaceDocumentsAt(s"$tablesDir/fragments",
+      frags)
     graft.search.LexIndex.appendDelta(spark, tablesDir, ids, frags)
     graft.search.LexIndex.maybeCompact(spark, tablesDir)
     ()
@@ -1139,36 +1099,6 @@ object EventStreams {
     applyVersionedBatch(indexPath, embedder, latenessMicros, batch) {
       (spark, emb) =>
         graft.search.HnswMaintenance.updateIndexByDoc(spark, indexPath, emb)
-        ()
-    }
-
-  /** [[ingestHnswIndexStreamVersioned]]'s ROUTED twin: the shared
-    * versioned protocol (in-batch latest-version dedupe, applied-
-    * versions ledger, lateness horizon) driving
-    * [[graft.search.HnswMaintenance.updateIndexByDocRouted]].
-    */
-  def ingestRoutedHnswIndexStreamVersioned(docs: Dataset[VersionedDocInput],
-      indexPath: String, embedder: graft.embedding.Embedder,
-      checkpoint: String,
-      latenessSec: Long = 600L): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[VersionedDocInput], _: Long) =>
-        applyVersionedRoutedHnswIngestBatch(indexPath, embedder,
-          latenessSec * 1000000L, batch)
-      }
-      .start()
-
-  /** One micro-batch of [[ingestRoutedHnswIndexStreamVersioned]] —
-    * exposed for deterministic replay in specs.
-    */
-  private[graft] def applyVersionedRoutedHnswIngestBatch(indexPath: String,
-      embedder: graft.embedding.Embedder,
-      latenessMicros: Long, batch: Dataset[VersionedDocInput]): Unit =
-    applyVersionedBatch(indexPath, embedder, latenessMicros, batch) {
-      (spark, emb) =>
-        graft.search.HnswMaintenance.updateIndexByDocRouted(spark,
-          indexPath, emb)
         ()
     }
 

@@ -475,7 +475,7 @@ class HnswMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("routed insert-only delta extends cells in place; witness holds") {
     val (path, router) = freshRoutedIndex("r_ins")
-    val stats = HnswMaintenance.updateIndexRouted(spark, path, toDf(extra))
+    val stats = HnswMaintenance.updateIndex(spark, path, toDf(extra))
     assert(stats.rebuiltShards.isEmpty,
       s"insert-only routed update rebuilt ${stats.rebuiltShards}")
     assert(stats.extendedShards.nonEmpty && stats.incomingRows == 100)
@@ -501,7 +501,7 @@ class HnswMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val oldCells = Ivf.nearestLists(all(7), router, 2).toSet
     val newCells = Ivf.nearestLists(newVec, router, 2).toSet
     assume(oldCells != newCells, "test vector must actually move cells")
-    val stats = HnswMaintenance.updateIndexRouted(spark, path,
+    val stats = HnswMaintenance.updateIndex(spark, path,
       toDf(Seq((id(7), newVec))))
     assert(stats.rebuiltShards.nonEmpty)
     val content = base.map { case (f, v) =>
@@ -518,7 +518,7 @@ class HnswMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("routed deletion removes every replica copy; witness holds") {
     val (path, router) = freshRoutedIndex("r_del")
     val dropped = Seq(id(3), id(250))
-    val stats = HnswMaintenance.updateIndexRouted(spark, path,
+    val stats = HnswMaintenance.updateIndex(spark, path,
       toDf(Nil), dropIds = dropped)
     assert(stats.incomingRows == 0 && stats.affectedShards.nonEmpty)
     assertRoutedWitness(path, router,
@@ -526,6 +526,44 @@ class HnswMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ids = spark.read.parquet(path).select("fragment_id")
       .collect().map(_.getString(0)).toSet
     assert(dropped.forall(!ids.contains(_)))
+  }
+
+  test("updateIndexByDoc on a ROUTED index path maintains it through " +
+      "the routed placement (the router sidecar declares the layout)") {
+    val s = spark
+    import s.implicits._
+    val docOf: String => String = f => if (f < id(250)) "docA" else "docB"
+    val path = s"$dir/r_bydoc"
+    val router = Ivf.train(base.map(_._2).toArray, 4, iters = 5)
+    HnswMaintenance.writeIndexRouted(
+      base.map { case (f, v) => (f, v, docOf(f)) }
+        .toDF("fragment_id", "vector", "document_id"),
+      path, router, replicas = 2, m = 8, efConstruction = 48,
+      docCol = Some("document_id"))
+    // docA re-ingests as two fragments with brand-new ids
+    val newRows = Seq(("g000001", norm(all(3)), "docA"),
+      ("g000002", norm(all(400)), "docA"))
+    val stats = HnswMaintenance.updateIndexByDoc(spark, path,
+      newRows.toDF("fragment_id", "vector", "document_id"))
+    assert(stats.incomingRows == 2 && stats.rebuiltShards.nonEmpty)
+    val rows = spark.read.parquet(path)
+      .select("fragment_id", "doc_id", "shard_id", "router_hash").collect()
+    assert(rows.forall(_.getLong(3) == Ivf.contentHash(router)),
+      "every row must keep the router stamp")
+    val docA = rows.filter(_.getString(1) == "docA")
+    assert(docA.map(_.getString(0)).toSet == Set("g000001", "g000002"),
+      "old docA rows must be gone")
+    // each new id lives exactly in the 2 cells its vector routes to
+    newRows.foreach { case (f, v, _) =>
+      val cells = docA.filter(_.getString(0) == f)
+        .map(_.getInt(2) / Hnsw.RoutedSubFactor).toSeq
+      assert(cells.size == 2 &&
+        cells.toSet == Ivf.nearestLists(v, router, 2).toSet,
+        s"$f replicated into cells $cells")
+    }
+    assertRoutedWitness(path, router,
+      base.filter(r => docOf(r._1) == "docB") ++
+        newRows.map(r => (r._1, r._2)))
   }
 
   test("a hot routed cell re-splits its sub-shards under the same " +
@@ -541,7 +579,7 @@ class HnswMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
       (fid, all(0).zipWithIndex.map { case (x, j) =>
         x + (if (j == 0) i * 1e-4f else 0f) })
     }
-    val stats = HnswMaintenance.updateIndexRouted(spark, path, toDf(hot))
+    val stats = HnswMaintenance.updateIndex(spark, path, toDf(hot))
     assert(stats.rebuiltShards.nonEmpty,
       s"a blown sub-budget must rebuild (re-split), got $stats")
     val after = spark.read.parquet(path).groupBy("shard_id").count()
@@ -563,7 +601,7 @@ class HnswMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (path, router) = freshRoutedIndex("r_untouched", replicas = 1)
     val before = shardFiles(path)
     val delta = Seq((id(900), norm(all(42))))
-    val stats = HnswMaintenance.updateIndexRouted(spark, path, toDf(delta))
+    val stats = HnswMaintenance.updateIndex(spark, path, toDf(delta))
     val touched = stats.affectedShards.map(s => s"shard_id=$s").toSet
     val after = shardFiles(path)
     before.foreach { case (shard, files) =>
@@ -580,12 +618,12 @@ class HnswMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assume(Ivf.contentHash(other) != Ivf.contentHash(router))
     Ivf.save(other.copy(replicas = 2), s"$path.router.txt")
     val e = intercept[IllegalArgumentException] {
-      HnswMaintenance.updateIndexRouted(spark, path, toDf(extra.take(1)))
+      HnswMaintenance.updateIndex(spark, path, toDf(extra.take(1)))
     }
     assert(e.getMessage.contains("router_hash mismatch"))
     // heal the sidecar: maintenance works again
     Ivf.save(router.copy(replicas = 2), s"$path.router.txt")
-    HnswMaintenance.updateIndexRouted(spark, path, toDf(extra.take(1)))
+    HnswMaintenance.updateIndex(spark, path, toDf(extra.take(1)))
     assertRoutedWitness(path, router, base :+ extra.head)
   }
 
@@ -617,7 +655,7 @@ class HnswMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
       m = 8, efConstruction = 48, docCol = Some("document_id"))
 
     val mem = MemoryStream[DocInput]
-    val query = EventStreams.ingestRoutedHnswIndexStream(mem.toDS(), path,
+    val query = EventStreams.ingestHnswIndexStream(mem.toDS(), path,
       embedder, s"$dir/r_stream_ckpt")
     try {
       mem.addData(doc("r/a.txt", "alpha-updated"))

@@ -572,4 +572,45 @@ class HnswRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.conf.unset(HnswIndexRewrite.ProbeCellsKey)
     }
   }
+
+  test("a flat index written over a routed one serves flat: the stale " +
+      "router sidecar is dropped, no cell is pruned away") {
+    val s = spark
+    val path = s"$dir/hnsw_relayout_idx"
+    val router = graft.search.Ivf.train(rawRows.map(_._2).toArray, 4,
+      iters = 5)
+    graft.search.HnswMaintenance.writeIndexRouted(s.read.parquet(basePath),
+      path, router, replicas = 1, m = 8, efConstruction = 48)
+    graft.search.HnswMaintenance.writeIndex(s.read.parquet(basePath), path,
+      numShards = 2)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$path.router.txt")))
+    // a query routed away from cell 0: every flat shard id falls in cell
+    // 0's range, so a routed walk of the flat graph would read nothing
+    val q = (0 until 4).map(c => Array(c * 10f + 0.2f, 0.3f, 1f, 0.7f))
+      .find(v => graft.search.Ivf.nearestLists(v, router, 1).head != 0).get
+    def knn(): DataFrame = {
+      s.read.parquet(basePath).createOrReplaceTempView("emb_relayout")
+      s.sql(
+        s"""SELECT fragment_id,
+           |  vector_cosine(vector,
+           |    CAST(array(${q.mkString(", ")}) AS array<float>)) AS sim
+           |FROM emb_relayout ORDER BY sim DESC, fragment_id LIMIT 5"""
+          .stripMargin)
+    }
+    try {
+      val exact = knn().collect().map(_.getString(0)).toSeq
+      spark.conf.set(HnswIndexRewrite.IndexKey, path)
+      spark.conf.set(HnswIndexRewrite.EfKey, n.toString)
+      spark.conf.set(HnswIndexRewrite.ProbeCellsKey, "1")
+      val served = knn()
+      assert(served.queryExecution.executedPlan.toString
+        .contains("MapGroups"), "the rewrite must fire")
+      val got = served.collect().map(_.getString(0)).toSeq
+      assert(got.size == 5 && got == exact, s"flat serve lost rows: $got")
+    } finally {
+      confOff()
+      spark.conf.unset(HnswIndexRewrite.ProbeCellsKey)
+      spark.catalog.dropTempView("emb_relayout")
+    }
+  }
 }

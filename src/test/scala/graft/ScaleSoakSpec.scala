@@ -982,7 +982,7 @@ class ScaleSoakSpec extends AnyFunSuite with BeforeAndAfterAll {
             .as("vector"))
       val nRepl = repl.count()
       val (statsA, updASec) = timedSec {
-        HnswMaintenance.updateIndexRouted(s, idx, repl) }
+        HnswMaintenance.updateIndex(s, idx, repl) }
       val cellsA = statsA.affectedShards
         .map(_ / Hnsw.RoutedSubFactor).distinct.size
       info(f"legA: $nRepl rows, $cellsA/$totalCells cells, " +
@@ -1038,7 +1038,7 @@ class ScaleSoakSpec extends AnyFunSuite with BeforeAndAfterAll {
             2, 9)).as("fragment_id"), col("vector"))
       val nIns = ins.count()
       val (statsB, updBSec) = timedSec {
-        HnswMaintenance.updateIndexRouted(s, idx, ins) }
+        HnswMaintenance.updateIndex(s, idx, ins) }
       info(f"legB: $nIns rows, ${statsB.extendedShards.size} extended + " +
         f"${statsB.rebuiltShards.size} rebuilt(re-split) shards, " +
         f"$updBSec%.1f s")
