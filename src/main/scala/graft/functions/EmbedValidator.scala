@@ -67,12 +67,4 @@ object EmbedValidator {
       ReferenceTargetsKo.exists(stripped.contains)
     en || ko
   }
-
-  /** Human-readable reason, None when eligible (validators.py:156-175). */
-  def ineligibilityReason(content: String): Option[String] =
-    if (Hashing.lengthCodePoints(content) < MinLength)
-      Some(s"FRAG-LEN-001: Content too short (${Hashing.lengthCodePoints(content)} < $MinLength chars)")
-    else if (isBoilerplate(content)) Some("EMBED-BAN-003: Detected as boilerplate text")
-    else if (isPureReference(content)) Some("EMBED-BAN-006: Pure reference text")
-    else None
 }

@@ -17,10 +17,11 @@ import org.apache.spark.sql.functions._
   *  - unit / fragment ids: ingestion/segmentation.py:148-182,
   *    concept_builder.py:130-133, 213-217
   *
-  * Each helper has two forms: a plain Scala function (used inside
-  * per-document folds where rows don't exist yet) and a `Column` form built
-  * from Spark built-ins (`md5`, `concat_ws`, `substring`) so the columnar
-  * path stays inside whole-stage codegen — no UDFs.
+  * Each helper is a plain Scala function (used inside per-document folds
+  * where rows don't exist yet); the content hash and embedding doc_id
+  * also have a `Column` form built from Spark built-ins (`md5`,
+  * `concat_ws`) so the columnar path stays inside whole-stage codegen —
+  * no UDFs.
   */
 object Hashing {
 
@@ -92,15 +93,4 @@ object Hashing {
   def docIdCol(parentId: Column, view: Column, lang: Column,
       content: Column): Column =
     concat(lit("doc:"), contentHashCol(parentId, view, lang, content))
-
-  def documentIdCol(sourcePath: Column): Column = md5(sourcePath)
-
-  def conceptIdCol(documentId: Column, unitId: Column): Column =
-    substring(md5(concat_ws("|", documentId, unitId)), 1, 16)
-
-  def fragmentIdCol(conceptId: Column, order: Column, content: Column): Column =
-    concat_ws("-",
-      substring(conceptId, 1, 12),
-      order.cast("string"),
-      substring(md5(substring(content, 1, 200)), 1, 8))
 }

@@ -104,10 +104,6 @@ object TextSketch {
     bitCols.reduce(_ + _)
   }
 
-  /** Hamming distance between two simhash values (bit_count of xor). */
-  def hammingDistance(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b)).cast("int")
-
   /** Document fingerprint: min rolling hash over character n-grams —
     * a 1-component winnowing sketch for exact-ish containment detection.
     */

@@ -115,13 +115,4 @@ object Parsers {
     flushTextBuf()
     segments.toSeq
   }
-
-  /** Dispatch by extension (api/use_cases/ingest.py:246-265; PDF parsers are
-    * separate sources — see [[graft.sources]]).
-    */
-  def parseByExtension(documentId: String, sourcePath: String,
-      raw: String): Seq[RawSegment] =
-    if (sourcePath.endsWith(".md") || sourcePath.endsWith(".markdown"))
-      parseMarkdown(documentId, raw)
-    else parseText(documentId, raw)
 }

@@ -11,9 +11,10 @@ import org.apache.spark.storage.StorageLevel
   * stand-in for a write-time table column; d2/d3 share one MinHash pass)
   * and small values that cost a Spark job to derive (the BM25 stats row,
   * a trained quantizer, a temp index directory, an opened serving
-  * table and its file listing). A bare process-global
-  * map would pin executor storage, retain stopped SparkSessions and
-  * serve values across sessions for the JVM lifetime; a slot instead:
+  * table and its file listing, a restored serving graph). A bare
+  * process-global map would pin executor storage, retain stopped
+  * SparkSessions and serve values across sessions for the JVM lifetime;
+  * a slot instead:
   *
   *  - holds `(fingerprint, value)`: a call with another fingerprint
   *    disposes of the old value and rebuilds;
@@ -86,14 +87,22 @@ object StageCache {
     * tables, where a flat listing sees only the partition DIRECTORIES
     * and is blind to rewrites inside them. Metadata-only — a file-tree
     * walk, zero data read. */
-  def treeFingerprint(dir: String, params: String): String = {
-    def walk(f: java.io.File, rel: String): Seq[String] =
-      if (f.isFile) Seq(s"$rel:${f.length}")
+  def treeFingerprint(dir: String, params: String): String =
+    treeStat(dir, params)._1
+
+  /** [[treeFingerprint]] and the total bytes of the files it covers, from
+    * one walk: the on-disk size a resident copy of the table is sized
+    * from ([[graft.search.VectorSearch.dense]]'s size guard). */
+  def treeStat(dir: String, params: String): (String, Long) = {
+    def walk(f: java.io.File, rel: String): Seq[(String, Long)] =
+      if (f.isFile) Seq((rel, f.length))
       else Option(f.listFiles()).toSeq.flatten
         .filterNot(_.getName.startsWith("_"))
         .flatMap(c => walk(c, if (rel.isEmpty) c.getName
                               else s"$rel/${c.getName}"))
-    s"$params|${walk(new java.io.File(dir), "").sorted.mkString(",")}"
+    val files = walk(new java.io.File(dir), "")
+    (s"$params|${files.map { case (r, n) => s"$r:$n" }.sorted.mkString(",")}",
+      files.map(_._2).sum)
   }
 
   private def metaFile(dir: java.io.File) =

@@ -106,8 +106,10 @@ object Hnsw {
   def contentHash(raw: Array[Float]): Long = normHash(raw)
 
   /** In-memory deterministic HNSW over unit-normalized vectors (cosine
-    * ranking via dot product). Not thread-safe; one instance per
-    * partition/task.
+    * ranking via dot product). Insertion is not thread-safe (one building
+    * instance per partition/task); searches only read the graph, so
+    * threads may share a restored index (the [[distOps]] statistic may
+    * then lose counts).
     *
     * @param m  max out-degree at layers ≥ 1 (layer 0 allows 2·m)
     * @param efConstruction  beam width during insertion
@@ -652,19 +654,14 @@ object Hnsw {
     Ivf.save(router.copy(replicas = replicas), s"$path.router.txt")
   }
 
-  /** Batch ANN over a persisted adjacency table ([[saveIndex]]): each
-    * shard's rows regroup into one task, the graph RESTORES from its
-    * stored neighbor lists (no re-insertion, no distance computations),
-    * answers the broadcast batch, and the per-query window merges — the
-    * read path costs O(index bytes) + O(queries·ef·log n_shard), never a
-    * rebuild.
-    */
   /** A restored, driver/serving-process-resident copy of a persisted
     * index: every shard graph in memory, answering ONE query at a time
     * with no Spark job on the query path. This is the online-ANN serving
     * boundary made concrete: Spark builds and maintains the index (write
-    * time, [[saveIndex]]/[[HnswMaintenance]]), batch analytics walks it
-    * distributed ([[searchIndex]]), and a serving node loads THIS — the
+    * time, [[saveIndex]]/[[HnswMaintenance]]), batch analytics and the
+    * SQL rewrite walk it distributed ([[searchIndex]]), and the serve
+    * path walks THIS: [[VectorSearch.dense]] (`hybrid-search`,
+    * `hnsw-search`) keeps one per session in a `StageCache` slot — the
     * same division as the reference, whose serving index lives inside
     * postgres/pgvector (storage/schema.py:78-84) while batch work runs
     * outside. The collect here is the index itself — a serving node's
@@ -761,12 +758,13 @@ object Hnsw {
   }
 
   /** A restored ROUTED index on a serving node: the same in-memory
-    * working set as [[ServingIndex]], but shard graphs are keyed by
-    * their router CELL and a point query walks only its `probeCells`
-    * nearest cells' sub-graphs — the layout's flat-in-shard-count
-    * property carried onto the no-Spark-job serving path (at 800 shards
-    * the unrouted restore walks all 800 graphs per query; this walks
-    * R·subs). Replicated layouts answer one vector from several probed
+    * working set as [[ServingIndex]] (and, like it, the serve path's
+    * walk: `hnsw-search-routed`, `hybrid-search` over a routed index),
+    * but shard graphs are keyed by their router CELL and a point query
+    * walks only its `probeCells` nearest cells' sub-graphs — the
+    * layout's flat-in-shard-count property carried onto the
+    * no-Spark-job serving path (at 800 shards the unrouted restore walks
+    * all 800 graphs per query; this walks R·subs). Replicated layouts answer one vector from several probed
     * cells with IDENTICAL (id, sim) rows — the merge dedupes by id.
     * `probeCells ≥ router.k` degenerates to the full fan-out.
     */
@@ -816,7 +814,9 @@ object Hnsw {
         col("router_hash") =!= lit(h)).limit(1)
       require(bad.isEmpty,
         "hnsw router_hash mismatch: the routed adjacency was not " +
-          "assigned by this router — refusing to restore for serving")
+          "assigned by this router (torn adjacency/sidecar pair or " +
+          "retrained router) — refusing to restore for serving; re-run " +
+          "hnsw-index-routed")
     }
     val byCell = restoreShards(index, idCol)
       .groupBy(_._1 / RoutedSubFactor).view
@@ -825,14 +825,21 @@ object Hnsw {
   }
 
   /** Distributed batch search over the persisted adjacency, optionally
-    * FILTERED: `predicate` is any boolean Column over the index
-    * DataFrame's columns (join metadata onto the adjacency first if the
-    * filter lives elsewhere — the adjacency carries `doc_id` for
-    * exactly that). Eligibility is evaluated ONCE per node in the scan;
-    * inside each shard the graph restores in full (navigation must
-    * traverse disallowed nodes) and the walk collects eligible nodes
-    * only ([[Index.searchFiltered]]). `ef ≥ max shard size` ⇒ exact
-    * filtered batch KNN — the unfiltered witness carries over.
+    * FILTERED: each shard's rows regroup into one task, the graph
+    * RESTORES from its stored neighbor lists (no re-insertion, no
+    * distance computations), answers the broadcast batch, and the
+    * per-query window merges — O(index bytes) + O(queries·ef·log
+    * n_shard), never a rebuild. The batch and SQL path, and the serve's
+    * fallback for an adjacency too large to hold resident
+    * ([[VectorSearch.dense]]). `predicate` is any boolean Column over
+    * the index DataFrame's columns (join metadata onto the adjacency
+    * first if the filter lives elsewhere — the adjacency carries
+    * `doc_id` for exactly that). Eligibility is evaluated ONCE per node
+    * in the scan; inside each shard the graph restores in full
+    * (navigation must traverse disallowed nodes) and the walk collects
+    * eligible nodes only ([[Index.searchFiltered]]). `ef ≥ max shard
+    * size` ⇒ exact filtered batch KNN — the unfiltered witness carries
+    * over.
     *
     * Output schema (since r11): `(query_id, <idCol>, similarity,
     * vec_hash, rank)` — `vec_hash` is the per-node content witness the

@@ -98,15 +98,50 @@ object VectorSearch {
       FlatGraph
     else ExactScan
 
+  /** Driver-heap bytes a restored graph ([[Hnsw.ServingIndex]]) takes
+    * per byte of its adjacency table on disk: 1.73 at 150 nodes, 2.69 at
+    * 20k and 2.66 at 100k (dim 64, `graft.ResidentHeapGen` in the test
+    * tree: live heap after full collections with and without restored
+    * copies held, over [[StageCache.treeStat]]'s bytes), rounded up.
+    * The restored neighbor lists hold boxed ints that parquet stores in
+    * a few bytes (SCALE.md, "Resident dense graph"). */
+  private[search] val ResidentExpansion = 3.0
+
+  /** The resident size guard: an adjacency of `treeBytes` on disk is
+    * restored into the driver only when its expected heap fits a quarter
+    * of `maxHeap`. A restore briefly holds the collected rows beside the
+    * graph, and the driver's own Spark work needs the rest. */
+  private[search] def residentFits(treeBytes: Long, maxHeap: Long): Boolean =
+    treeBytes * ResidentExpansion <= maxHeap / 4.0
+
   /** The dense channel: top-`c` `(fragment_id, similarity)` of `query`
     * over a tables dir through `route`, in rank order, the query
-    * embedded at the artifact's dimension. A view/lang scope filters
-    * before rank: the graph adjacency holds no metadata, so eligibility
-    * joins on from `embeddings` once per node and the bounded beam
-    * accepts eligible nodes only. */
+    * embedded at the artifact's dimension.
+    *
+    * A graph route walks a RESIDENT graph: the adjacency restored once
+    * per session into a [[StageCache.memo]] slot `serving:<path>`
+    * ([[Hnsw.restoreServing]] / [[Hnsw.restoreServingRouted]]), so a
+    * warm walk runs no Spark job. The slot's fingerprint is the
+    * adjacency's [[StageCache.treeFingerprint]]; the routed layout adds
+    * the router sidecar's [[Ivf.contentHash]], because the sidecar sits
+    * outside the tree and a retrain must reopen the slot (or fail its
+    * `router_hash` guard). A view/lang scope walks with its eligible
+    * fragment ids, kept in a slot `eligible:<embeddings path>:<view>:
+    * <lang>` fingerprinted by the `embeddings` tree; a node with no
+    * `embeddings` row is not eligible.
+    *
+    * The size guard ([[residentFits]] of the tree's bytes against
+    * `maxHeap`, the driver's max heap) keeps an adjacency that would not
+    * fit on the distributed [[Hnsw.searchIndex]] / [[Hnsw.searchIndexRouted]]
+    * walk, with eligibility joined on from `embeddings` per serve. Both
+    * walks search each shard graph with the same `Index.search` /
+    * `searchFiltered` at `k = clampTopK(c)` and merge by (similarity
+    * desc, id asc), the routed one deduping replicas: they return the
+    * same hits. */
   def dense(spark: SparkSession, tablesDir: String, query: String, c: Int,
       ef: Int, view: Option[String], lang: Option[String],
-      route: DenseRoute): Seq[(String, Double)] = {
+      route: DenseRoute,
+      maxHeap: Long = Runtime.getRuntime.maxMemory): Seq[(String, Double)] = {
     def embed(dim: Int) =
       new graft.embedding.OfflineEmbedder(dim).embedQuery(query)
     // kept beside the opened table, under the same fingerprint: one
@@ -121,8 +156,28 @@ object VectorSearch {
         first(0).getAs[scala.collection.Seq[Float]](0).length
       }
     }
+    val scope = Seq(view.map(col("view") === _), lang.map(col("lang") === _))
+      .flatten
+    def allowed: Option[Set[String]] =
+      if (scope.isEmpty) None
+      else {
+        val path = s"$tablesDir/embeddings"
+        Some(StageCache.memo(spark, s"eligible:$path:$view:$lang",
+            StageCache.treeFingerprint(path, "")) {
+          scope.foldLeft(StageCache.table(spark, path))(_.filter(_))
+            .select(col("fragment_id")).collect().map(_.getString(0)).toSet
+        })
+      }
+    // the restored graph at `path` when it fits the driver, else None
+    def resident[G](path: String, params: String)(
+        restore: DataFrame => G): Option[G] = {
+      val (fp, bytes) = StageCache.treeStat(path, params)
+      if (!residentFits(bytes, maxHeap)) None
+      else Some(StageCache.memo(spark, s"serving:$path", fp)(
+        restore(StageCache.table(spark, path))))
+    }
     def scoped(index: DataFrame): (DataFrame, Option[Column]) =
-      if (view.isEmpty && lang.isEmpty) (index, None)
+      if (scope.isEmpty) (index, None)
       else {
         val meta = StageCache.table(spark, s"$tablesDir/embeddings")
           .select(col("fragment_id").as("__fid"),
@@ -131,26 +186,39 @@ object VectorSearch {
           Some(Seq(view.map(col("__view") === _),
             lang.map(col("__lang") === _)).flatten.reduce(_ && _)))
       }
-    val hits = route match {
+    def collected(hits: DataFrame): Seq[(String, Double)] =
+      hits.select(col("fragment_id"), col("similarity")).collect()
+        .map(r => (r.getString(0), r.getDouble(1))).toSeq
+    route match {
       case RoutedGraph(r) =>
         val path = s"$tablesDir/embeddings_hnsw_routed"
         val router = Ivf.load(s"$path.router.txt")
-        val (searchable, pred) = scoped(StageCache.table(spark, path))
-        Hnsw.searchIndexRouted(searchable, Seq(("q", embed(router.dim))),
-          c, ef, router, probeShards = r, predicate = pred)
-          .orderBy(col("rank"))
+        val qvec = embed(router.dim)
+        resident(path, s"router=${Ivf.contentHash(router)}")(
+            Hnsw.restoreServingRouted(_, router)) match {
+          case Some(g) => allowed.fold(g.search(qvec, c, ef, r))(
+            g.searchFiltered(qvec, c, ef, r, _)).toSeq
+          case None =>
+            val (searchable, pred) = scoped(StageCache.table(spark, path))
+            collected(Hnsw.searchIndexRouted(searchable, Seq(("q", qvec)),
+              c, ef, router, probeShards = r, predicate = pred)
+              .orderBy(col("rank")))
+        }
       case FlatGraph =>
+        val path = s"$tablesDir/embeddings_hnsw"
         val qvec = embed(dimOf("embeddings_hnsw", "hnsw-index"))
-        val (searchable, pred) =
-          scoped(StageCache.table(spark, s"$tablesDir/embeddings_hnsw"))
-        Hnsw.searchIndex(searchable, Seq(("q", qvec)), c, ef,
-          predicate = pred).orderBy(col("rank"))
+        resident(path, "")(Hnsw.restoreServing(_)) match {
+          case Some(g) => allowed.fold(g.search(qvec, c, ef))(
+            g.searchFiltered(qvec, c, ef, _)).toSeq
+          case None =>
+            val (searchable, pred) = scoped(StageCache.table(spark, path))
+            collected(Hnsw.searchIndex(searchable, Seq(("q", qvec)), c, ef,
+              predicate = pred).orderBy(col("rank")))
+        }
       case ExactScan =>
-        knn(StageCache.table(spark, s"$tablesDir/embeddings"),
-          embed(dimOf("embeddings", "ingest")), c, view, lang)
+        collected(knn(StageCache.table(spark, s"$tablesDir/embeddings"),
+          embed(dimOf("embeddings", "ingest")), c, view, lang))
     }
-    hits.select(col("fragment_id"), col("similarity")).collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toSeq
   }
 
   /** A2 with the over-fetch fix: the reference dedupes AFTER limit and can

@@ -239,6 +239,66 @@ class FusionFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
       e2.getMessage.contains("ingest"), e2.getMessage)
   }
 
+  test("a reingest reopens the resident dense slots: the rewritten " +
+      "fragment is dense top-1 and a re-viewed fragment follows its new " +
+      "view") {
+    import org.apache.spark.sql.functions.col
+    import graft.search.VectorSearch.{FlatGraph, dense}
+    val engine = new Engine(spark, new OfflineEmbedder(64))
+    val td = s"$dir/tables_resident"
+    val helper = "helper that folds the ledger totals into one balance"
+    val fa = writeDoc("ra.md", "# India\n\nindia notes about spark " +
+      "shuffles and partition pruning in wide joins\n")
+    val fb = writeDoc("rb.md", s"# Juliet\n\njuliet notes about vector " +
+      s"recall and graph upkeep\n\n$helper\n")
+    val fc = writeDoc("rc.md", "# Kilo\n\nkilo notes about lexical " +
+      "postings\n\n```python\ndef kilo_total(rows):\n    return " +
+      "sum(rows)\n```\n")
+    ingestTables(td, List(fa, fb, fc), engine)
+    calibrateAt(td)
+    graft.search.HnswMaintenance.writeIndex(
+      spark.read.parquet(s"$td/embeddings"), s"$td/embeddings_hnsw",
+      numShards = 2, docCol = Some("document_id"))
+    val rewrittenQuery = "quokka marsupials basking on warm granite"
+    // warm both slots: the resident graph and the code scope's ids
+    assert(dense(spark, td, rewrittenQuery, 5, 64, None, None, FlatGraph)
+      .nonEmpty)
+    assert(dense(spark, td, helper, 10, 64, Some("code"), None, FlatGraph)
+      .nonEmpty)
+
+    // one fragment's content changes; another moves into a code fence
+    Files.write(Paths.get(fa), s"# India\n\n$rewrittenQuery\n"
+      .getBytes(StandardCharsets.UTF_8))
+    Files.write(Paths.get(fb), (s"# Juliet\n\njuliet notes about vector " +
+      s"recall and graph upkeep\n\n```python\n$helper\n```\n")
+      .getBytes(StandardCharsets.UTF_8))
+    Cli.reingestCommand(spark, engine, td, List(fa, fb))
+
+    val emb = spark.read.parquet(s"$td/embeddings")
+    def rowWhere(content: String, view: String): (String, String) = {
+      val rows = emb.filter(col("content").contains(content) &&
+        col("view") === view).select("fragment_id", "content").collect()
+        .map(r => (r.getString(0), r.getString(1)))
+      assert(rows.length == 1, s"$content as $view: ${rows.toSeq}")
+      rows.head
+    }
+    val (rewritten, rewrittenContent) = rowWhere("quokka", "text")
+    val (reviewed, _) = rowWhere("ledger totals", "code")
+    // the offline embedder places a text's own vector first (identity)
+    val top = dense(spark, td, rewrittenContent, 5, 64, None, None,
+      FlatGraph)
+    assert(top.headOption.map(_._1).contains(rewritten),
+      s"the rewritten fragment must be dense top-1 after the reingest: $top")
+    val asCode = dense(spark, td, helper, 10, 64, Some("code"), None,
+      FlatGraph).map(_._1)
+    assert(asCode.contains(reviewed),
+      s"a code-scoped serve must include the re-viewed fragment: $asCode")
+    val asText = dense(spark, td, helper, 10, 64, Some("text"), None,
+      FlatGraph).map(_._1)
+    assert(asText.nonEmpty && !asText.contains(reviewed),
+      s"a text-scoped serve must exclude the re-viewed fragment: $asText")
+  }
+
   private def calibrateAt(td: String): Unit = {
     val a = FusionFloor.calibrate(
       spark.read.parquet(s"$td/fragments"), "id", "content",

@@ -8,9 +8,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.VolumeWitness
 
-/** One started Spark job: its task count over all stages and its
-  * description. */
-final case class JobRecord(tasks: Int, description: String) {
+/** One started Spark job: its task count over all stages, its
+  * description and its stages' names (`<action> at <File>.scala:<line>`,
+  * the call site that started it). */
+final case class JobRecord(tasks: Int, description: String,
+    stages: Seq[String] = Nil) {
 
   /** Spark's parallel partition discovery: the job a table open runs
     * once a directory level holds more than 32 subdirectories. */
@@ -27,7 +29,7 @@ object JobLog {
         jobs.add(JobRecord(e.stageInfos.map(_.numTasks).sum,
           Option(e.properties)
             .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse("")))
+            .getOrElse(""), e.stageInfos.map(_.name)))
     }
     VolumeWitness.sync(spark)
     spark.sparkContext.addSparkListener(listener)
